@@ -12,6 +12,9 @@ to sub-ULP float divergence, raw scores are not part of the contract.
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+from functools import cached_property
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -687,7 +690,7 @@ def sim_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         F.col("label").alias("own_label"),
         F.col("embedding").cast("array<double>").alias("emb"),
-    ).crossJoin(F.broadcast(_pack_collect(cents))).select(
+    ).crossJoin(F.broadcast(_centroid_pack(cents))).select(
         "vec_id",
         "own_label",
         _argmax_cluster(F.col("emb"), F.col("cs")).alias("assigned_cluster"),
@@ -775,14 +778,12 @@ def _centroid_pack(cents: DataFrame) -> DataFrame:
     ).agg(F.array_sort(F.collect_list("c")).alias("cs"))
 
 
-def _pack_local(spark: SparkSession, rows, with_m: bool = False) -> DataFrame:
+def _pack_local(spark: SparkSession, rows) -> DataFrame:
     """Driver-side packed-centroid frame from COLLECTED rows that already
     carry ``half_cnorm`` (computed by the canonical Spark expression in
-    the collect query — no driver float arithmetic): the LocalRelation
-    equivalent of :func:`_centroid_pack` / :func:`_codebook_pack`.
-    Broadcasting a LocalRelation never launches a job, which is what
-    makes a Lloyd's round a single-job operation. ``with_m`` groups the
-    rows per subspace id (the PQ codebook shape)."""
+    the collect query — no driver float arithmetic): the one-slice local
+    equivalent of :func:`_centroid_pack`, broadcast by
+    :func:`_ivf_probes` for a :class:`Centroids`."""
     from pyspark.sql import types as T
 
     st = T.StructType(
@@ -792,26 +793,8 @@ def _pack_local(spark: SparkSession, rows, with_m: bool = False) -> DataFrame:
             T.StructField("half_cnorm", T.DoubleType()),
         ]
     )
-    cent_key = (
-        "centroid"
-        if not rows or "centroid" in rows[0].__fields__
-        else "c_sub"
-    )
-    if with_m:
-        by_m: dict[int, list] = {}
-        for r in rows:
-            by_m.setdefault(r["m"], []).append(
-                (int(r["cluster"]), list(r[cent_key]), float(r["half_cnorm"]))
-            )
-        data = [
-            (m, sorted(cs, key=lambda t: t[0])) for m, cs in sorted(by_m.items())
-        ]
-        schema = T.StructType(
-            [T.StructField("m", T.IntegerType()), T.StructField("cs", T.ArrayType(st))]
-        )
-        return _local_df(spark, data, schema)
     packed = sorted(
-        ((int(r["cluster"]), list(r[cent_key]), float(r["half_cnorm"])) for r in rows),
+        ((int(r["cluster"]), list(r["centroid"]), float(r["half_cnorm"])) for r in rows),
         key=lambda t: t[0],
     )
     return _local_df(
@@ -819,97 +802,82 @@ def _pack_local(spark: SparkSession, rows, with_m: bool = False) -> DataFrame:
     )
 
 
-def _pack_collect(cents: DataFrame, with_m: bool = False) -> DataFrame:
-    """Pack a k-row centroid frame (or k x M_SUB codebook, ``with_m``)
-    for the single-row argmax broadcast, choosing the cheaper of two
-    routes by the frame's provenance:
+@dataclass(frozen=True, eq=False)
+class Centroids:
+    """Trained centroids held driver-side: the k collected rows
+    ``(cluster, centroid, n_members, half_cnorm)`` or, with ``m``, the
+    k x M_SUB PQ codebook rows ``(m, cluster, c_sub, half_cnorm)``.
+    Half-norms come from the canonical ``0.5 * dot`` Spark expression in
+    the collect query (never driver float arithmetic) and collected
+    doubles round-trip exactly.
 
-    - a frame whose lineage is already driver-local (the LocalRelations
-      the trainings return) is collected and rebuilt via
-      :func:`_pack_local` — the collect is driver-side only and packing
-      + broadcasting launch NO job, which is what makes a Lloyd's round
-      a single-job operation;
-    - a distributed frame (the persisted parquet index read by the
-      ``*_indexed`` / append / incremental serving paths) keeps the
-      IN-PLAN pack aggregate (:func:`_centroid_pack` /
-      :func:`_codebook_pack`), so the physical plan retains the
-      ``FileScan`` of ``/coarse`` / ``/codebook`` / ``/centroids`` — the
-      plan-asserted evidence (tests/test_plans.py) that serving reads
-      the persisted index rather than re-deriving it, and the k-row pack
-      rows never transit py4j.
+    :func:`kmeans_train` and :func:`pq_train_codebooks` return one, and
+    assign/encode pick their implementation by argument type: a
+    ``Centroids`` runs the bit-exact Arrow kernels
+    (:func:`_seq_assign_kernel` / :func:`_seq_pq_kernel`); a DataFrame —
+    a persisted index read back with ``spark.read.parquet`` — keeps the
+    in-plan fold (:func:`_centroid_pack` / :func:`_codebook_pack` +
+    :func:`_argmax_cluster`), so serving plans retain the index
+    ``FileScan`` (asserted in tests/test_plans.py)."""
 
-    Half-norms come from the canonical ``0.5 * dot`` expression in both
-    routes — never driver float arithmetic. Frames returned by the
-    trainings carry their pack prebuilt (``_r12_pack`` / ``_r12_pack_m``,
-    from the rows the training already collected) — the zero-work fast
-    path."""
-    pre = getattr(cents, "_r12_pack_m" if with_m else "_r12_pack", None)
-    if pre is not None:
-        return pre
-    spark = cents.sparkSession
-    if "LocalRelation" not in cents._jdf.queryExecution().analyzed().toString():
-        return _codebook_pack(cents) if with_m else _centroid_pack(cents)
-    if with_m:
-        rows = cents.select(
-            "m", "cluster", "c_sub", F.col("half_n").alias("half_cnorm")
-        ).collect()
-    else:
+    rows: tuple
+    spark: SparkSession
+    m: bool = False
+
+    @classmethod
+    def from_frame(cls, df: DataFrame) -> "Centroids":
+        """Collect a persisted ``(cluster, n_members, centroid)`` frame
+        once — the init-once hoist for serving loops whose centroids stay
+        frozen (one k-row collect per stream run instead of a parquet
+        re-read and pack aggregate per micro-batch)."""
         half = (F.lit(0.5) * dot(F.col("centroid"), F.col("centroid"))).alias(
             "half_cnorm"
         )
-        rows = cents.select("cluster", "centroid", half).collect()
-    return _pack_local(spark, rows, with_m=with_m)
+        rows = df.select("cluster", "centroid", "n_members", half).collect()
+        return cls(tuple(rows), df.sparkSession)
+
+    @cached_property
+    def df(self) -> DataFrame:
+        """The rows as a frame in the trainings' output schema, for
+        callers that write or join it."""
+        if self.m:
+            return _local_df(
+                self.spark,
+                [(r["m"], r["cluster"], r["c_sub"], r["half_cnorm"]) for r in self.rows],
+                "m int, cluster int, c_sub array<double>, half_n double",
+            )
+        return _local_df(
+            self.spark,
+            [(r["cluster"], r["n_members"], r["centroid"]) for r in self.rows],
+            "cluster int, n_members bigint, centroid array<double>",
+        )
+
+    @cached_property
+    def bc(self):
+        """The kernels' numpy operand as ONE broadcast owned by this value
+        (driver-local, launches no job); Spark's ContextCleaner reclaims
+        it once the value is garbage."""
+        return self.spark.sparkContext.broadcast(
+            _rows_np_m(self.rows) if self.m else _rows_np(self.rows, "centroid")
+        )
 
 
-def preload_pack(df: DataFrame, with_m: bool = False) -> DataFrame:
-    """Collect a PERSISTED centroid/codebook frame once and attach its
-    packed broadcast operand (``_r12_pack`` / ``_r12_pack_m``), so every
-    later :func:`_pack_collect` on the frame is the zero-work fast path.
-
-    This is the per-stream-run hoist for foreachBatch serving loops
-    (guide §4.5's init-once rule applied at the plan level): a streaming
-    query whose centroids are FROZEN for its whole lifetime should read
-    and pack them once per run, not once per micro-batch — the per-batch
-    in-plan pack re-reads the parquet and pays an aggregate stage inside
-    every trigger's broadcast sub-job. Half-norms come from the canonical
-    ``0.5 * dot`` expression inside the collect query (never driver float
-    arithmetic), and collected doubles round-trip exactly, so assigns
-    against the preloaded pack are bit-identical to the in-plan form."""
-    spark = df.sparkSession
-    half = lambda c: (F.lit(0.5) * dot(F.col(c), F.col(c))).alias("half_cnorm")  # noqa: E731
-    if with_m:
-        rows = df.select("m", "cluster", "c_sub", half("c_sub")).collect()
-        df._r12_pack_m = _pack_local(spark, rows, with_m=True)
-    else:
-        rows = df.select("cluster", "centroid", half("centroid")).collect()
-        df._r12_pack = _pack_local(spark, rows)
-    return df
+def _frame(cents: Centroids | DataFrame) -> DataFrame:
+    """The centroid/codebook rows as a frame, whichever form they came in."""
+    return cents.df if isinstance(cents, Centroids) else cents
 
 
 def _local_df(spark: SparkSession, data, schema) -> DataFrame:
     """Single-partition driver-local frame. ``spark.createDataFrame(list)``
     parallelizes to ``defaultParallelism`` slices, so BROADCASTING such a
     frame runs a 32-task job over mostly-empty partitions — measured
-    0.25 s per broadcast at local[32], once per Lloyd's round / pack
-    consumer (r13; the r12 notes assumed a LocalRelation, but PySpark's
-    createDataFrame is RDD-backed). One slice makes it a 1-task job."""
+    0.25 s per broadcast at local[32]. One slice makes it a 1-task job."""
     return spark.createDataFrame(
         spark.sparkContext.parallelize(data, 1), schema
     )
 
 
-def _cents_local(spark: SparkSession, rows) -> DataFrame:
-    """(cluster, centroid) driver-local frame from collected centroid rows —
-    the frame shape :func:`_blas_assign` consumes (it collects the k-row
-    matrix driver-side anyway, so a local frame costs it nothing)."""
-    return _local_df(
-        spark,
-        [(int(r["cluster"]), list(r["centroid"])) for r in rows],
-        "cluster int, centroid array<double>",
-    )
-
-
-# --- r13: bit-exact vectorized assign/encode kernels -------------------------
+# --- bit-exact vectorized assign/encode kernels -----------------------------
 #
 # The per-row score of every assign/encode pass is the SEQUENTIAL
 # double fold ``((0.0 + e0*c0) + e1*c1) + ...`` minus the precomputed
@@ -936,13 +904,14 @@ def _cents_local(spark: SparkSession, rows) -> DataFrame:
 # rows, where the canonical ``0.5 * dot`` Spark expression produced them.
 
 
-def _rows_np(rows):
+def _rows_np(rows, key: str):
     """(ids, C, half) numpy views of collected centroid rows
-    (cluster-ascending). Collected doubles round-trip exactly."""
+    (cluster-ascending), the centroid vectors read from column ``key``.
+    Collected doubles round-trip exactly. No rows (an empty corpus
+    trains none) give empty arrays: the kernels then see no batch."""
     import numpy as np
 
     srt = sorted(rows, key=lambda r: int(r["cluster"]))
-    key = "centroid" if "centroid" in srt[0].__fields__ else "c_sub"
     ids = np.array([int(r["cluster"]) for r in srt], dtype=np.int64)
     C = np.array([list(r[key]) for r in srt], dtype=np.float64)
     half = np.array([float(r["half_cnorm"]) for r in srt], dtype=np.float64)
@@ -954,7 +923,7 @@ def _rows_np_m(rows):
     by_m: dict[int, list] = {}
     for r in rows:
         by_m.setdefault(int(r["m"]), []).append(r)
-    return {m: _rows_np(rs) for m, rs in sorted(by_m.items())}
+    return {m: _rows_np(rs, "c_sub") for m, rs in sorted(by_m.items())}
 
 
 def _seq_scores_best(E, ids, C, half):
@@ -990,16 +959,16 @@ def _seq_nrm(E):
     return np.sqrt(np.add.accumulate(E * E, axis=1)[:, -1])
 
 
-def _seq_assign_kernel(e: DataFrame, rows, with_nrm: bool = False) -> DataFrame:
-    """Arrow-batched assign against driver-collected centroid rows:
-    (vec_id, cluster, emb[, nrm]) with values bit-identical to the
-    broadcast-pack argmax expression (see the block comment above). The
-    centroid matrix ships as an RDD broadcast (driver-local, launches no
-    job — the packed-frame broadcast it replaces ran a parallelize job
-    per round), k is broadcast-clamped as ever (SEM_MAX_K), and the
-    corpus stays distributed."""
-    spark = e.sparkSession
-    bc = spark.sparkContext.broadcast(_rows_np(rows))
+def _seq_assign_kernel(
+    e: DataFrame, cents: Centroids, with_nrm: bool = False
+) -> DataFrame:
+    """Arrow-batched assign against a :class:`Centroids`: (vec_id,
+    cluster, emb[, nrm]) with values bit-identical to the in-plan argmax
+    fold (see the block comment above). The centroid matrix ships as the
+    value's broadcast (driver-local, launches no job), k is
+    broadcast-clamped as ever (SEM_MAX_K), and the corpus stays
+    distributed."""
+    bc = cents.bc
 
     def fn(batches):
         import numpy as np
@@ -1026,22 +995,23 @@ def _seq_assign_kernel(e: DataFrame, rows, with_nrm: bool = False) -> DataFrame:
 
 
 def _seq_pq_kernel(
-    embeddings: DataFrame, rows_m, coarse_rows=None, emit: str = "codes"
+    embeddings: DataFrame,
+    cb: Centroids,
+    coarse: Centroids | None = None,
+    emit: str = "codes",
 ) -> DataFrame:
-    """Arrow-batched per-subspace encode against driver-collected codebook
-    rows; slices each vector into its M_SUB contiguous subspaces in the
-    kernel (replacing the posexplode + per-m pack join) and computes the
-    per-subspace argmax with the same sequential fold.
+    """Arrow-batched per-subspace encode against a codebook
+    :class:`Centroids`; slices each vector into its M_SUB contiguous
+    subspaces in the kernel (no posexplode, no per-m pack join) and
+    computes the per-subspace argmax with the same sequential fold.
 
     emit="codes": (vec_id, m, code) — the pq_encode shape.
     emit="train": (m, cluster, sub_vec) — the training-round recompute
     input (sub_vec echoes through Arrow exactly).
-    With ``coarse_rows`` the COARSE argmax is fused into the same pass
-    (the inverted-list build): (vec_id, cluster, m, code)."""
-    spark = embeddings.sparkSession
-    bc = spark.sparkContext.broadcast(
-        (_rows_np_m(rows_m), _rows_np(coarse_rows) if coarse_rows else None)
-    )
+    With ``coarse`` the COARSE argmax is fused into the same pass (the
+    inverted-list build): (vec_id, cluster, m, code)."""
+    bc_m = cb.bc
+    bc_c = None if coarse is None else coarse.bc
     emb = F.col("embedding").cast("array<double>").alias("emb") \
         if "emb" not in embeddings.columns else F.col("emb")
     src = embeddings.select("vec_id", emb)
@@ -1050,7 +1020,8 @@ def _seq_pq_kernel(
         import numpy as np
         import pandas as pd
 
-        per_m, coarse = bc.value
+        per_m = bc_m.value
+        coarse_np = None if bc_c is None else bc_c.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -1058,8 +1029,8 @@ def _seq_pq_kernel(
             n = E.shape[0]
             parts = []
             cl = (
-                _seq_scores_best(E, *coarse).astype("int32")
-                if coarse is not None
+                _seq_scores_best(E, *coarse_np).astype("int32")
+                if coarse_np is not None
                 else None
             )
             for m, (ids, C, half) in per_m.items():
@@ -1086,7 +1057,7 @@ def _seq_pq_kernel(
 
     if emit == "train":
         schema = "m int, cluster int, sub_vec array<double>"
-    elif coarse_rows is not None:
+    elif coarse is not None:
         schema = "vec_id bigint, cluster int, m int, code int"
     else:
         schema = "vec_id bigint, m int, code int"
@@ -1209,20 +1180,20 @@ def kmeans_train(
     embeddings: DataFrame,
     k: int = 4,
     n_iters: int = 3,
-    impl: str = "native",
     dim: int | None = None,
-) -> DataFrame:
-    """Deterministic Lloyd's k-means over an embedding column.
+) -> Centroids:
+    """Deterministic Lloyd's k-means over an embedding column; returns the
+    trained :class:`Centroids` (its ``df`` is ``(cluster, n_members,
+    centroid)``).
 
     Per iteration (composing the registered assign/centroid steps into the
     full training loop):
 
-    * **assign**: the k centroids (half-norms precomputed) pack into ONE
-      broadcast array row (:func:`_centroid_pack`) and each corpus row
-      computes ``max_by(cluster, (score, -cluster))`` locally
-      (:func:`_argmax_cluster`) — the assign stage is SHUFFLE-FREE (r12;
-      previously a k-fold crossJoin collapsed back through a
-      ``groupBy(vec_id)`` exchange of the whole corpus per round).
+    * **assign**: each corpus row computes ``max_by(cluster, (score,
+      -cluster))`` against the round's k centroids (half-norms
+      precomputed) in the bit-exact Arrow kernel
+      (:func:`_seq_assign_kernel`) — the assign stage is SHUFFLE-FREE: no
+      (row x centroid) materialization, no ``groupBy(vec_id)`` exchange.
     * **recompute**: exact 1e-7-scaled integer sums per dimension
       (order-independent => identical at any partition count). With a
       known fixed width (``dim=...``, every similarity call site) this is
@@ -1230,22 +1201,20 @@ def kmeans_train(
       ``dim=None`` keeps the dynamic posexplode cell path.
     * **lineage / iteration cost**: each round COLLECTS the k centroid
       rows to the driver (bounded: k is clamped by SEM_MAX_K /
-      ceil(sqrt(n)) — the same k-row driver materialization
-      ``_blas_assign`` has always done) and rebuilds them as a
-      LocalRelation, so one Lloyd's round is exactly ONE Spark job (scan
-      + local argmax + one aggregate exchange + k-row collect): no
-      per-round ``localCheckpoint`` block writes and no separate
-      broadcast-exchange job — a LocalRelation broadcast is driver-local
-      (r12; previously ~3 jobs and 3 exchanges per round). Half-norms
-      are computed INSIDE the collect query with the canonical
-      ``0.5 * dot`` expression, so no driver-side float arithmetic ever
-      enters the comparison path.
+      ceil(sqrt(n))) and ships them to the next round's kernel as one
+      driver-local broadcast, so one Lloyd's round is exactly ONE Spark
+      job (scan + local argmax + one aggregate exchange + k-row
+      collect). That collect is the round broadcast's only consumer, so
+      the broadcast is destroyed right after it. Half-norms are computed
+      INSIDE the collect query with the canonical ``0.5 * dot``
+      expression, so no driver-side float arithmetic ever enters the
+      comparison path.
 
     Determinism end-to-end: md5-ranked init, integer-scaled sums, explicit
-    argmax tiebreak toward the smaller cluster id; the r12 rewrites are
-    value-identical (same fold order, same tiebreak, exact double
-    round-trip through collect), so the unrolled DuckDB oracles are
-    unchanged.
+    argmax tiebreak toward the smaller cluster id, same fold order and an
+    exact double round-trip through collect, so the unrolled DuckDB
+    oracles reproduce every round. An empty corpus trains no rows and
+    returns an empty value.
     """
     spark = embeddings.sparkSession
     e = _spread(embeddings).select(
@@ -1268,24 +1237,8 @@ def kmeans_train(
         .collect()  # k seed rows; halves computed by the canonical expr
     )
     for _ in range(n_iters):
-        if impl == "blas":
-            assigned = _blas_assign(e, _cents_local(spark, rows))
-        elif rows:
-            # shuffle-free assign: the sequential-fold argmax evaluated by
-            # the Arrow kernel (r13) — bit-identical scores and tiebreak
-            # (see _seq_assign_kernel), no (row x centroid)
-            # materialization, no groupBy(vec_id) exchange (guide §2.4),
-            # and no pack-broadcast job per round (the r12 packed-frame
-            # broadcast ran a 32-task parallelize job each round).
-            assigned = _seq_assign_kernel(e, rows)
-        else:
-            # empty corpus (no seed rows): the expression form yields the
-            # empty result the pre-r13 path produced
-            assigned = e.crossJoin(F.broadcast(_pack_local(spark, rows))).select(
-                "vec_id",
-                "emb",
-                _argmax_cluster(F.col("emb"), F.col("cs")).alias("cluster"),
-            )
+        cur = Centroids(tuple(rows), spark)
+        assigned = _seq_assign_kernel(e, cur)
         if dim is not None:
             # fixed-width corpus: ONE aggregation for the recompute
             recompute = _mean_by_cluster(assigned, ["cluster"], "emb", dim)
@@ -1316,22 +1269,11 @@ def kmeans_train(
                     F.first("n_members").alias("n_members"),
                 )
             )
-        # ONE job per round: this collect is the round's only action
+        # ONE job per round: this collect is the round's only action and
+        # the only consumer of the round's broadcast
         rows = recompute.select("cluster", "centroid", "n_members", half).collect()
-    out = _local_df(
-        spark,
-        [(r["cluster"], r["n_members"], r["centroid"]) for r in rows],
-        "cluster int, n_members bigint, centroid array<double>",
-    )
-    # the rows are already driver-side: build the argmax pack here so
-    # downstream consumers (kmeans_assign / _ivf_probes / the fused
-    # encode) never re-collect this frame — each re-collect cost a full
-    # analyze + py4j row transfer + createDataFrame per consumer
-    out._r12_pack = _pack_local(spark, rows)
-    out._r13_rows = rows  # the same k rows, for the Arrow assign kernel
-    return out
-
-
+        cur.bc.destroy()
+    return Centroids(tuple(rows), spark)
 
 
 def _kmeans_cte_parts(
@@ -1424,7 +1366,9 @@ def _kmeans_oracle(k: int = 4, n_iters: int = 3) -> str:
     ),
 )
 def sim_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return kmeans_train(load_table(spark, sf_dir, "embeddings"), k=4, n_iters=3, dim=DIM)
+    return kmeans_train(
+        load_table(spark, sf_dir, "embeddings"), k=4, n_iters=3, dim=DIM
+    ).df
 
 
 # ---------------------------------------------------------------------------
@@ -1470,86 +1414,25 @@ def _semantic_k_sql(src: str = "embeddings") -> str:
     )
 
 
-def _blas_assign(e: DataFrame, cents: DataFrame) -> DataFrame:
-    """The O(n * k) assign hot loop as an Arrow-batched numpy kernel: the
-    k-row centroid matrix materializes driver-side (k is broadcast-clamped
-    by SEM_MAX_K — never corpus-sized), each Arrow batch computes one
-    |batch x k| matmul, and ``argmax`` row-wise with numpy's
-    first-max-wins tiebreak — identical to the native ``max_by(cluster,
-    (score, -cluster))`` because the centroid ids are sorted ascending.
-
-    WHY this exists: the native expression path evaluates the score as a
-    per-(row, centroid) higher-order-function fold — measured ~50x slower
-    than BLAS at k in the thousands (decade-100 probe: the flat assign at
-    200k x 3125 saturated 32 cores past a 50-min timeout natively;
-    seconds per pass here — SCALE.md). The native path stays the DEFAULT
-    and the oracle-parity reference (sequential-fold rounding is
-    bit-reproducible in DuckDB; BLAS reassociates, so equality holds for
-    any non-degenerate gap between best and runner-up scores —
-    test-pinned agreement on the fixture corpus)."""
-    import numpy as np
-    import pandas as pd
-
-    rows = sorted(
-        cents.select("cluster", "centroid").collect(), key=lambda r: r.cluster
-    )
-    ids = np.array([r.cluster for r in rows], dtype=np.int64)
-    C = np.array([r.centroid for r in rows], dtype=np.float64)
-    half = 0.5 * (C * C).sum(axis=1)
-
-    def fn(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            E = np.stack(pdf["emb"].to_numpy())
-            S = E @ C.T - half
-            best = ids[S.argmax(axis=1)].astype("int32")
-            nrm = np.sqrt((E * E).sum(axis=1))
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "cluster": best,
-                    "emb": pdf["emb"],
-                    "nrm": nrm,
-                }
-            )
-
-    return e.mapInPandas(
-        fn, schema="vec_id bigint, cluster int, emb array<double>, nrm double"
-    )
-
-
 def kmeans_assign(
-    embeddings: DataFrame, cents: DataFrame, impl: str = "native"
+    embeddings: DataFrame, cents: Centroids | DataFrame
 ) -> DataFrame:
-    """One broadcast-assign pass against trained centroids: the packed
-    centroid array broadcasts as a single row and each vector computes
-    its argmax locally (r12 — zero exchanges; the earlier crossJoin/
-    ``max_by`` form re-shuffled the corpus by vec_id). Returns
-    ``(vec_id, cluster, emb, nrm)``. Cost is O(n * k) dot products with
-    NO shuffle at all; k is bounded by the broadcast clamp (SEM_MAX_K).
-    ``impl="blas"`` swaps the score evaluation for the Arrow-batched
-    numpy kernel (:func:`_blas_assign`) — the measured ~50x hot-loop win
-    once auto-sized k reaches the thousands."""
+    """One shuffle-free assign pass against trained centroids: each
+    vector computes its argmax locally, so the pass carries ZERO
+    exchanges. Returns ``(vec_id, cluster, emb, nrm)``. Cost is O(n * k)
+    dot products; k is bounded by the broadcast clamp (SEM_MAX_K).
+
+    A :class:`Centroids` runs the bit-exact Arrow kernel; a DataFrame (a
+    persisted index) broadcasts its in-plan pack as one array row and
+    folds per row, so the plan keeps the index FileScan. Both give the
+    same clusters and norms, bit for bit."""
     e = _spread(embeddings).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
-    if impl == "blas":
-        return _blas_assign(e, cents)
-    rows = getattr(cents, "_r13_rows", None)
-    if rows:
-        # r13: trained frames carry their k collected rows — the assign
-        # runs as the bit-exact Arrow sequential-fold kernel (no pack
-        # broadcast job, no interpreted per-row fold). Column order
-        # matches the expression form below.
-        return _seq_assign_kernel(e, rows, with_nrm=True)
-    # r12: one-row centroid-array broadcast + per-row argmax — the assign
-    # pass carries ZERO exchanges (the crossJoin/max_by form re-shuffled
-    # the corpus by vec_id); scores/tiebreak identical. Kept for frames
-    # whose centroids are NOT driver-side (persisted-index serving paths,
-    # where the plan must retain the index FileScan).
+    if isinstance(cents, Centroids):
+        return _seq_assign_kernel(e, cents, with_nrm=True)
     return (
-        e.crossJoin(F.broadcast(_pack_collect(cents)))
+        e.crossJoin(F.broadcast(_centroid_pack(cents)))
         .select(
             "vec_id",
             _argmax_cluster(F.col("emb"), F.col("cs")).alias("cluster"),
@@ -1564,7 +1447,6 @@ def semantic_dedup(
     k: int | None = None,
     n_iters: int = 2,
     threshold: float = 0.35,
-    impl: str = "native",
 ) -> DataFrame:
     """Unsupervised semantic dedup, the SemDeDup shape (Abbas et al.,
     arXiv:2303.09540): k-means clusters the embedding space, exact cosine
@@ -1597,9 +1479,9 @@ def semantic_dedup(
     embeddings = _pin(embeddings)
     if k is None:
         k = semantic_k(embeddings.count())
-    cents = kmeans_train(embeddings, k=k, n_iters=n_iters, impl=impl, dim=DIM)
+    cents = kmeans_train(embeddings, k=k, n_iters=n_iters, dim=DIM)
     assigned = (
-        kmeans_assign(embeddings, cents, impl=impl)
+        kmeans_assign(embeddings, cents)
         # assignment appears THREE times downstream (both pair-join sides
         # + the final keep join); without this the k-row-broadcast assign
         # pass re-runs per copy — measured 14.0 -> 4.5 s warm at sf0.1/k=32
@@ -1715,9 +1597,8 @@ def build_semantic_index(old_corpus: DataFrame, path: str, n_iters: int = 2) -> 
     the old corpus exactly once, here."""
     k = semantic_k(old_corpus.count())
     cents = kmeans_train(old_corpus, k=k, n_iters=n_iters, dim=DIM)
-    cents.write.mode("overwrite").parquet(f"{path}/centroids")
-    cents_r = old_corpus.sparkSession.read.parquet(f"{path}/centroids")
-    kmeans_assign(old_corpus, cents_r).write.mode("overwrite").parquet(
+    cents.df.write.mode("overwrite").parquet(f"{path}/centroids")
+    kmeans_assign(old_corpus, cents).write.mode("overwrite").parquet(
         f"{path}/assign"
     )
 
@@ -1788,7 +1669,7 @@ def semantic_stream_batch(
     pairs_root: str,
     threshold: float = 0.35,
     batch_app: str | None = None,
-    cents: DataFrame | None = None,
+    cents: Centroids | None = None,
 ) -> None:
     """One micro-batch of STREAMING semantic dedup — a two-table
     exactly-once transaction built from snapshot batch commits:
@@ -1815,11 +1696,10 @@ def semantic_stream_batch(
     checkpoint's maximum redelivery lag, the same rule Delta documents
     for streaming sources over vacuumed tables.
 
-    ``cents`` (optional) is the centroid frame preloaded once per stream
-    run by the caller (:func:`preload_pack` — the centroids are frozen
-    for the stream's lifetime, so per-batch re-reads are pure overhead);
-    when omitted the batch reads ``cents_path`` itself, the pre-r12
-    shape."""
+    ``cents`` (optional) is the :class:`Centroids` the caller collected
+    once per stream run (the centroids are frozen for the stream's
+    lifetime, so per-batch re-reads are pure overhead); when omitted the
+    batch reads ``cents_path`` itself."""
     from ..plans.snapshots import (
         snapshot_read,
         snapshot_version_of_batch,
@@ -1877,13 +1757,10 @@ def _semantic_stream_state_for(spark: SparkSession, sf_dir: str) -> tuple:
         )
     ).select("vec_id", "embedding")
     cents_path = tempfile.mkdtemp(prefix="semstream_cents_")
-    kmeans_train(old, k=semantic_k(old.count()), n_iters=2, dim=DIM).write.mode(
-        "overwrite"
-    ).parquet(cents_path)
+    cents = kmeans_train(old, k=semantic_k(old.count()), n_iters=2, dim=DIM)
+    cents.df.write.mode("overwrite").parquet(cents_path)
     index_root = tempfile.mkdtemp(prefix="semstream_idx_")
-    snapshot_write(
-        kmeans_assign(old, spark.read.parquet(cents_path)), index_root
-    )
+    snapshot_write(kmeans_assign(old, cents), index_root)
     pairs_root = tempfile.mkdtemp(prefix="semstream_pairs_")
     # arrival dir: the new half as TWO id-ordered files with forced
     # mtimes — day-2 batches are time-ordered by contract (each day
@@ -1949,12 +1826,11 @@ def stream_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             StructField("embedding", ArrayType(FloatType())),
         ]
     )
-    # centroids are FROZEN for the stream's lifetime: read + pack them
-    # ONCE per run (k-row collect, LocalRelation broadcast) instead of a
-    # per-micro-batch parquet re-read + in-plan pack aggregate — the
-    # per-trigger serving cost drops by one scan and one aggregate stage
-    # per batch; assigns are bit-identical (preload_pack).
-    cents = preload_pack(spark.read.parquet(cents_path))
+    # centroids are FROZEN for the stream's lifetime: collect them ONCE
+    # per run instead of a per-micro-batch parquet re-read + in-plan pack
+    # aggregate; every batch then assigns through the Arrow kernel, bit
+    # for bit what the in-plan fold gives.
+    cents = Centroids.from_frame(spark.read.parquet(cents_path))
     q = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -2138,13 +2014,14 @@ def pq_train_codebooks(
     Same determinism skeleton as :func:`kmeans_train` — md5-ranked init
     (the first ``k`` vectors by hash60 seed every subspace), exact
     1e-7-scaled integer centroid sums, argmax tiebreak toward the smaller
-    cluster id, k x M_SUB-row collect + LocalRelation per round (r12:
-    one job and one exchange per round, no checkpoint blocks) — which
-    makes the whole training loop bit-reproducible and therefore
+    cluster id, one k x M_SUB-row collect per round (one job and one
+    exchange per round; the round's broadcast is destroyed after it) —
+    which makes the whole training loop bit-reproducible and therefore
     UNROLLABLE into a DuckDB oracle (``_pq_trained_cb_cte``): the
     registered query stays value-hash-checked even though training is
-    iterative. Output schema matches :func:`pq_codebook`:
-    (m, cluster, c_sub, half_n), |k x M_SUB| rows, broadcast everywhere.
+    iterative. Returns a codebook :class:`Centroids` (``m=True``) whose
+    ``df`` matches :func:`pq_codebook`: (m, cluster, c_sub, half_n),
+    |k x M_SUB| rows, broadcast everywhere.
     """
     corpus = _spread(embeddings)
     sub = _subvectors(corpus, "vec_id")
@@ -2165,12 +2042,12 @@ def pq_train_codebooks(
         .collect()  # k x M_SUB seed rows; halves by the canonical expr
     )
     for _ in range(n_iters):
-        # r13: per-subspace argmax via the Arrow sequential-fold kernel —
+        # per-subspace argmax via the Arrow sequential-fold kernel —
         # slicing, per-m codeword argmax and the sub_vec echo all happen
         # in one vectorized pass (bit-identical scores/tiebreak; see
-        # _seq_pq_kernel). Replaces the posexplode + per-m pack join +
-        # interpreted per-row fold, and the pack-broadcast job per round.
-        asg = _seq_pq_kernel(corpus, rows, emit="train")
+        # _seq_pq_kernel)
+        cur = Centroids(tuple(rows), spark, m=True)
+        asg = _seq_pq_kernel(corpus, cur, emit="train")
         # ONE hash aggregate for all 8 subspace recomputes ((m, cluster)
         # keyed, SUB_DIM static sums) — replaces the posexplode cell pass
         # plus second aggregation; identical exact-integer arithmetic.
@@ -2181,41 +2058,26 @@ def pq_train_codebooks(
             .select("m", "cluster", "c_sub", half)
             .collect()
         )
-    out = _local_df(
-        spark,
-        [(r["m"], r["cluster"], r["c_sub"], r["half_cnorm"]) for r in rows],
-        "m int, cluster int, c_sub array<double>, half_n double",
-    )
-    # rows already driver-side: prebuild the per-subspace pack so the
-    # encode consumers never re-collect this frame (see kmeans_train)
-    out._r12_pack_m = _pack_local(spark, rows, with_m=True)
-    out._r13_rows_m = rows  # the same rows, for the Arrow encode kernel
-    return out
+        cur.bc.destroy()  # the round's collect was its only consumer
+    return Centroids(tuple(rows), spark, m=True)
 
 
-def pq_encode(embeddings: DataFrame, codebook: DataFrame) -> DataFrame:
+def pq_encode(embeddings: DataFrame, codebook: Centroids | DataFrame) -> DataFrame:
     """(vec_id, m, code): nearest codeword per subspace.
 
-    argmin L2 == argmax(v_m . c - |c|^2/2) with half-norms precomputed in
-    the packed codebook (same identity as sim_ivf_assign). One broadcast
-    join on ``m`` + a per-row argmax (r12) — the corpus never shuffles
-    and no candidate rows materialize. The output is the PQ INDEX: 8 small ints (~8 bytes) per
-    vector replacing 64 floats, a 32x shrink; raw vectors never appear in
-    the ADC scan path again.
+    argmin L2 == argmax(v_m . c - |c|^2/2) with half-norms precomputed
+    (same identity as sim_ivf_assign), evaluated per row — the corpus
+    never shuffles and no candidate rows materialize. A codebook
+    :class:`Centroids` runs the bit-exact Arrow kernel; a DataFrame (a
+    persisted index) joins its M_SUB-row in-plan pack on ``m``, so the
+    plan keeps the index FileScan. The output is the PQ INDEX: 8 small
+    ints (~8 bytes) per vector replacing 64 floats, a 32x shrink; raw
+    vectors never appear in the ADC scan path again.
     """
-    rows_m = getattr(codebook, "_r13_rows_m", None)
-    if rows_m:
-        # r13: freshly-trained codebooks carry their collected rows — the
-        # encode runs as the bit-exact Arrow kernel (slices + per-m argmax
-        # in one pass; no posexplode, no pack-broadcast job).
-        return _seq_pq_kernel(_spread(embeddings), rows_m, emit="codes")
+    if isinstance(codebook, Centroids):
+        return _seq_pq_kernel(_spread(embeddings), codebook)
     sub = _subvectors(_spread(embeddings), "vec_id")
-    # r12: M_SUB-row packed-codebook broadcast + per-row argmax — the
-    # encode pass carries zero exchanges (previously 16 candidate rows
-    # per (vec, m) collapsed through a groupBy(vec_id, m) exchange).
-    # Kept for persisted-index codebooks (parquet-backed frames), where
-    # the plan must retain the index FileScan.
-    return sub.join(F.broadcast(_pack_collect(codebook, with_m=True)), "m").select(
+    return sub.join(F.broadcast(_codebook_pack(codebook)), "m").select(
         "vec_id",
         "m",
         _argmax_cluster(F.col("sub_vec"), F.col("cs")).alias("code"),
@@ -2227,7 +2089,7 @@ def pq_adc_topk(
     n_queries: int = 8,
     k: int = 5,
     shortlist: int = 100,
-    codebook: DataFrame | None = None,
+    codebook: Centroids | DataFrame | None = None,
     codes: DataFrame | None = None,
 ) -> DataFrame:
     """ADC shortlist + exact re-rank: the IVFADC retrieval pattern.
@@ -2256,7 +2118,7 @@ def pq_adc_topk(
     cb = pq_codebook(embeddings) if codebook is None else codebook
     codes = pq_encode(embeddings, cb) if codes is None else codes
     q = _subvectors(embeddings.where(F.col("vec_id") < n_queries), "query_id")
-    lut = q.join(F.broadcast(cb), "m").select(
+    lut = q.join(F.broadcast(_frame(cb)), "m").select(
         "query_id",
         "m",
         "cluster",
@@ -2508,9 +2370,8 @@ def build_pq_index(embeddings: DataFrame, path: str) -> None:
     and encoding read the raw vectors exactly once, HERE; the serving
     query never does."""
     cb = pq_train_codebooks(embeddings, k=16, n_iters=3)
-    cb.write.mode("overwrite").parquet(f"{path}/codebook")
-    cb_r = embeddings.sparkSession.read.parquet(f"{path}/codebook")
-    pq_encode(embeddings, cb_r).write.mode("overwrite").parquet(f"{path}/codes")
+    cb.df.write.mode("overwrite").parquet(f"{path}/codebook")
+    pq_encode(embeddings, cb).write.mode("overwrite").parquet(f"{path}/codes")
 
 
 #: per-sf_dir cache of built PQ-index paths (setup state, like
@@ -2595,10 +2456,15 @@ def _ivf_coarse_k_sql(src: str = "embeddings") -> str:
 
 
 def _ivf_probes(
-    embeddings: DataFrame, cents: DataFrame, n_queries: int, nprobe: int
+    embeddings: DataFrame,
+    cents: Centroids | DataFrame,
+    n_queries: int,
+    nprobe: int,
 ) -> DataFrame:
     """(query_id, cluster): each query's ``nprobe`` nearest coarse cells
-    — broadcast the (small) centroid table, argmax by the same
+    — broadcast the (small) centroid table packed into one array row
+    (from the collected rows of a :class:`Centroids`, or in-plan from a
+    persisted frame so the plan keeps its FileScan), ranked by the same
     dot-minus-half-norm score as assignment, smaller-cluster tiebreak.
     Shared by :func:`ivf_pq_topk` and tools/ivf_pq_scale_probe.py so the
     measured candidate count can never desynchronize from what serving
@@ -2636,8 +2502,13 @@ def _ivf_probes(
         1,
         nprobe,
     )
+    pack = (
+        _pack_local(cents.spark, cents.rows)
+        if isinstance(cents, Centroids)
+        else _centroid_pack(cents)
+    )
     return (
-        q.crossJoin(F.broadcast(_pack_collect(cents)))
+        q.crossJoin(F.broadcast(pack))
         .select("query_id", F.explode(ranked).alias("t"))
         .select("query_id", F.col("t.cluster").alias("cluster"))
     )
@@ -2650,10 +2521,9 @@ def ivf_pq_topk(
     shortlist: int = 50,
     nprobe: int = 2,
     coarse_iters: int = 2,
-    impl: str = "native",
-    coarse: DataFrame | None = None,
+    coarse: Centroids | DataFrame | None = None,
     assigned: DataFrame | None = None,
-    codebook: DataFrame | None = None,
+    codebook: Centroids | DataFrame | None = None,
     codes: DataFrame | None = None,
 ) -> DataFrame:
     """The full IVFADC retrieval architecture (Jégou et al., TPAMI'11):
@@ -2685,8 +2555,7 @@ def ivf_pq_topk(
     # the four index pieces are injectable (the serving shape: train/
     # assign/encode offline once — tools/ivf_pq_scale_probe.py times the
     # per-query path alone against a frozen parquet index)
-    fuse = coarse is None and assigned is None and codes is None
-    if fuse:
+    if coarse is None and assigned is None and codes is None:
         # r12: pin the projected corpus in the block manager for the
         # DURATION OF THIS CALL (the standard iterative-ML working-set
         # cache — Spark MLlib's own KMeans does the same): every Lloyd's
@@ -2710,7 +2579,7 @@ def ivf_pq_topk(
         k_coarse = ivf_coarse_k(embeddings.count())  # also materializes the pin
         cents, cb = _train_pair(
             lambda: kmeans_train(
-                embeddings, k=k_coarse, n_iters=coarse_iters, impl=impl, dim=DIM
+                embeddings, k=k_coarse, n_iters=coarse_iters, dim=DIM
             ),
             lambda: pq_train_codebooks(embeddings, k=16, n_iters=3),
         )
@@ -2718,7 +2587,7 @@ def ivf_pq_topk(
         cents = (
             kmeans_train(
                 embeddings, k=ivf_coarse_k(embeddings.count()),
-                n_iters=coarse_iters, impl=impl, dim=DIM,
+                n_iters=coarse_iters, dim=DIM,
             )
             if coarse is None
             else coarse
@@ -2727,7 +2596,7 @@ def ivf_pq_topk(
 
     probes = _ivf_probes(embeddings, cents, n_queries, nprobe)
     qsub = _subvectors(embeddings.where(F.col("vec_id") < n_queries), "query_id")
-    lut = qsub.join(F.broadcast(cb), "m").select(
+    lut = qsub.join(F.broadcast(_frame(cb)), "m").select(
         F.col("query_id").alias("l_query"),
         F.col("m").alias("l_m"),
         F.col("cluster").alias("codeword"),
@@ -2735,49 +2604,22 @@ def ivf_pq_topk(
         .cast("bigint")
         .alias("val"),
     )
-    if fuse:
-        # r12: build the INVERTED-LIST layout directly — coarse argmax and
-        # PQ codes computed in ONE narrow pass per vector (the natural
-        # IVFPQ index shape: codes stored per coarse cell), so the
-        # (codes x assigned) vec_id equi-join disappears from the plan
-        # entirely. r13: that one pass is the fused Arrow kernel (coarse
-        # argmax + all 8 subspace argmaxes per batch, bit-identical; both
-        # trainings' rows are already driver-side) — no pack broadcasts,
-        # no posexplode, no interpreted folds.
-        rows_c = getattr(cents, "_r13_rows", None)
-        rows_m = getattr(cb, "_r13_rows_m", None)
-        if rows_c and rows_m:
-            codes_c = _seq_pq_kernel(embeddings, rows_m, coarse_rows=rows_c)
-        else:
-            emb = F.col("embedding").cast("array<double>")
-            e2 = (
-                _spread(embeddings)
-                .crossJoin(F.broadcast(_pack_collect(cents)))
-                .select(
-                    "vec_id",
-                    "embedding",
-                    _argmax_cluster(emb, F.col("cs")).alias("cluster"),
-                )
-            )
-            subs = F.array(
-                *[F.slice(emb, m * SUB_DIM + 1, SUB_DIM) for m in range(M_SUB)]
-            )
-            codes_c = (
-                e2.select(
-                    "vec_id", "cluster", F.posexplode(subs).alias("m", "sub_vec")
-                )
-                .join(F.broadcast(_pack_collect(cb, with_m=True)), "m")
-                .select(
-                    "vec_id",
-                    "cluster",
-                    "m",
-                    _argmax_cluster(F.col("sub_vec"), F.col("cs")).alias("code"),
-                )
-            )
+    if (
+        isinstance(cents, Centroids)
+        and isinstance(cb, Centroids)
+        and assigned is None
+        and codes is None
+    ):
+        # both quantizers are driver-side: build the INVERTED-LIST layout
+        # directly — coarse argmax and all 8 subspace codes computed in
+        # ONE Arrow pass per vector (the natural IVFPQ index shape: codes
+        # stored per coarse cell), so the (codes x assigned) vec_id
+        # equi-join disappears from the plan entirely
+        codes_c = _seq_pq_kernel(embeddings, cb, coarse=cents)
         cand = codes_c.join(F.broadcast(probes), "cluster")
     else:
         assigned = (
-            kmeans_assign(embeddings, cents, impl=impl)
+            kmeans_assign(embeddings, cents)
             if assigned is None
             else assigned
         ).select("vec_id", "cluster")
@@ -3011,10 +2853,9 @@ def _pq_stream_state_for(spark: SparkSession, sf_dir: str) -> str:
     e = load_table(spark, sf_dir, "embeddings")
     old = e.where(F.col("vec_id") < PQ_APPEND_SPLIT)
     cb = pq_train_codebooks(old, k=16, n_iters=3)
-    cb.write.mode("overwrite").parquet(f"{path}/codebook")
-    cb_r = spark.read.parquet(f"{path}/codebook")
+    cb.df.write.mode("overwrite").parquet(f"{path}/codebook")
     (
-        pq_encode(old, cb_r)
+        pq_encode(old, cb)
         .withColumn("batch", F.lit(-1))
         .write.mode("overwrite")
         .partitionBy("batch")
@@ -3381,7 +3222,9 @@ def sim_outlier_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _pin(load_table(spark, sf_dir, "embeddings"))
     cents = kmeans_train(e, k=semantic_k(e.count()), n_iters=2, dim=DIM)
     assigned = kmeans_assign(e, cents)  # (vec_id, cluster, emb, nrm)
-    scored = assigned.join(F.broadcast(cents.select("cluster", "centroid")), "cluster").select(
+    scored = assigned.join(
+        F.broadcast(cents.df.select("cluster", "centroid")), "cluster"
+    ).select(
         "vec_id",
         "cluster",
         (
@@ -3406,27 +3249,25 @@ def build_ivf_pq_index(embeddings: DataFrame, path: str) -> None:
     coarse cell), ``<path>/codebook`` and ``<path>/codes`` (the PQ
     half). Both trainings and both encodes read the raw vectors exactly
     once, HERE; the serving query never does."""
-    spark = embeddings.sparkSession
     k_coarse = ivf_coarse_k(embeddings.count())
 
-    # r12: the coarse chain (train -> write -> assign -> write) and the
-    # PQ chain (train -> write -> encode -> write) are independent —
-    # neither reads the other's output — so they run on two driver
-    # threads (_train_pair); each chain's own job order and every
-    # written value are unchanged.
+    # the coarse chain (train -> write, assign -> write) and the PQ chain
+    # (train -> write, encode -> write) are independent — neither reads
+    # the other's output — so they run on two driver threads
+    # (_train_pair). Each chain assigns/encodes with the value it just
+    # trained; doubles round-trip parquet exactly, so the written
+    # assignment and codes equal what the persisted index would give.
     def _coarse_chain():
         cents = kmeans_train(embeddings, k=k_coarse, n_iters=2, dim=DIM)
-        cents.write.mode("overwrite").parquet(f"{path}/coarse")
-        kmeans_assign(embeddings, spark.read.parquet(f"{path}/coarse")).select(
-            "vec_id", "cluster"
-        ).write.mode("overwrite").parquet(f"{path}/assign")
+        cents.df.write.mode("overwrite").parquet(f"{path}/coarse")
+        kmeans_assign(embeddings, cents).select("vec_id", "cluster").write.mode(
+            "overwrite"
+        ).parquet(f"{path}/assign")
 
     def _pq_chain():
         cb = pq_train_codebooks(embeddings, k=16, n_iters=3)
-        cb.write.mode("overwrite").parquet(f"{path}/codebook")
-        pq_encode(embeddings, spark.read.parquet(f"{path}/codebook")).write.mode(
-            "overwrite"
-        ).parquet(f"{path}/codes")
+        cb.df.write.mode("overwrite").parquet(f"{path}/codebook")
+        pq_encode(embeddings, cb).write.mode("overwrite").parquet(f"{path}/codes")
 
     _train_pair(_coarse_chain, _pq_chain)
 

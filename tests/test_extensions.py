@@ -255,7 +255,7 @@ def test_kmeans_recovers_planted_blobs(spark):
         m = means[i % 3]
         rows.append((i, [float(x + rng.gauss(0, 0.3)) for x in m]))
     em = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    out = {r.cluster: r for r in kmeans_train(em, k=3, n_iters=3).collect()}
+    out = {r.cluster: r for r in kmeans_train(em, k=3, n_iters=3).df.collect()}
     assert len(out) == 3
     assert sum(r.n_members for r in out.values()) == 240
     # every trained centroid sits within 0.5 of one true blob mean
@@ -265,7 +265,9 @@ def test_kmeans_recovers_planted_blobs(spark):
         )
         assert best < 0.5, (r.cluster, best)
     # deterministic re-run
-    again = {r.cluster: r.centroid for r in kmeans_train(em, k=3, n_iters=3).collect()}
+    again = {
+        r.cluster: r.centroid for r in kmeans_train(em, k=3, n_iters=3).df.collect()
+    }
     assert {c: tuple(v) for c, v in again.items()} == {
         c: tuple(r.centroid) for c, r in out.items()
     }
@@ -708,113 +710,227 @@ def test_semantic_index_lifecycle_build_probe_append(spark, tmp_path):
     assert got1 | got2 == oneshot
 
 
-def test_blas_assign_agrees_with_native(spark):
-    """The BLAS assign kernel (the auto-k scale path) must agree with the
-    native expression path — same clusters, same training trajectory —
-    on the fixture corpus: full semantic_dedup output equality, both
-    impls, and kmeans_train centroid equality to 1e-9."""
-    from aws_logs_parquet_converter_spark.catalog import load_table
-    from aws_logs_parquet_converter_spark.operators.similarity import (
-        kmeans_train,
-        semantic_dedup,
-    )
-
-    em = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    nat = {(r.vec_id, r.cluster, r.keep) for r in semantic_dedup(em).collect()}
-    bls = {
-        (r.vec_id, r.cluster, r.keep)
-        for r in semantic_dedup(em, impl="blas").collect()
-    }
-    assert nat == bls
-    cn = {r.cluster: r.centroid for r in kmeans_train(em, k=8, n_iters=2).collect()}
-    cb = {
-        r.cluster: r.centroid
-        for r in kmeans_train(em, k=8, n_iters=2, impl="blas").collect()
-    }
-    assert cn.keys() == cb.keys()
-    for c in cn:
-        assert max(abs(a - b) for a, b in zip(cn[c], cb[c])) < 1e-9
-
-
-def test_seq_kernel_matches_expression_assign(spark):
-    """r13: the Arrow sequential-fold assign kernel must be BIT-identical
-    to the broadcast-pack argmax expression it replaced — same fold order
-    (np.add.accumulate + trailing +0.0), same smaller-cluster tiebreak.
-    Compares full (vec_id, cluster, nrm) output on the fixture corpus."""
-    from pyspark.sql import functions as F
-
+def test_seq_kernel_matches_expression_assign(spark, tmp_path):
+    """The two assign implementations must agree BIT for bit:
+    ``kmeans_assign`` with a trained ``Centroids`` runs the Arrow
+    sequential-fold kernel, and with the same centroids written to and
+    read back from parquet (a persisted index) it runs the in-plan
+    fold. Both exist because the serving plans must show the index
+    FileScan while training and index builds run the kernel. Compares
+    full (vec_id, cluster, nrm) output on the fixture corpus."""
     from aws_logs_parquet_converter_spark.catalog import load_table
     from aws_logs_parquet_converter_spark.operators.similarity import (
         DIM,
-        _argmax_cluster,
-        _pack_local,
-        _seq_assign_kernel,
-        dot,
+        kmeans_assign,
         kmeans_train,
     )
 
     em = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     cents = kmeans_train(em, k=8, n_iters=2, dim=DIM)
-    half = (F.lit(0.5) * dot(F.col("centroid"), F.col("centroid"))).alias(
-        "half_cnorm"
-    )
-    rows = cents.select("cluster", "centroid", half).collect()
-    e = em.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
-    kern = {
-        r["vec_id"]: (r["cluster"], r["nrm"])
-        for r in _seq_assign_kernel(e, rows, with_nrm=True).collect()
-    }
-    expr = {
-        r["vec_id"]: (r["cluster"], r["nrm"])
-        for r in e.crossJoin(
-            F.broadcast(_pack_local(spark, rows))
-        )
-        .select(
-            "vec_id",
-            _argmax_cluster(F.col("emb"), F.col("cs")).alias("cluster"),
-            F.sqrt(dot(F.col("emb"), F.col("emb"))).alias("nrm"),
-        )
-        .collect()
-    }
-    assert kern == expr  # exact equality including the float64 norms
+    path = str(tmp_path / "centroids")
+    cents.df.write.parquet(path)
+
+    def assign(c):
+        return {
+            r["vec_id"]: (r["cluster"], r["nrm"])
+            for r in kmeans_assign(em, c).collect()
+        }
+
+    # exact equality including the float64 norms
+    assert assign(cents) == assign(spark.read.parquet(path))
 
 
-def test_seq_pq_kernel_matches_expression_encode(spark):
-    """r13: the fused per-subspace encode kernel must reproduce the
-    pack-join + argmax expression form code-for-code."""
-    from pyspark.sql import functions as F
-
+def test_seq_pq_kernel_matches_expression_encode(spark, tmp_path):
+    """``pq_encode`` with a trained codebook ``Centroids`` (Arrow kernel)
+    must reproduce the in-plan pack-join + argmax over the same codebook
+    read back from parquet, code for code."""
     from aws_logs_parquet_converter_spark.catalog import load_table
     from aws_logs_parquet_converter_spark.operators.similarity import (
-        _argmax_cluster,
-        _pack_collect,
-        _seq_pq_kernel,
-        _subvectors,
+        pq_encode,
         pq_train_codebooks,
     )
 
     em = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     cb = pq_train_codebooks(em, k=16, n_iters=2)
-    kern = {
-        (r["vec_id"], r["m"]): r["code"]
-        for r in _seq_pq_kernel(em, cb._r13_rows_m, emit="codes").collect()
-    }
-    sub = _subvectors(em, "vec_id")
-    expr = {
-        (r["vec_id"], r["m"]): r["code"]
-        for r in sub.join(
-            F.broadcast(_pack_collect(cb, with_m=True)), "m"
-        )
-        .select(
-            "vec_id",
-            "m",
-            _argmax_cluster(F.col("sub_vec"), F.col("cs")).alias("code"),
-        )
-        .collect()
-    }
-    assert kern == expr
+    path = str(tmp_path / "codebook")
+    cb.df.write.parquet(path)
+
+    def encode(c):
+        return {(r["vec_id"], r["m"]): r["code"] for r in pq_encode(em, c).collect()}
+
+    assert encode(cb) == encode(spark.read.parquet(path))
+
+
+def test_kernel_and_fold_agree_on_nan_vectors(spark, tmp_path):
+    """A NaN component makes every score of that vector NaN. Catalyst
+    orders NaN above every double, so the in-plan fold picks the
+    smallest cluster id; the kernel must do the same (a NaN beats any
+    finite best, the first NaN wins). Pinned for the coarse assign, the
+    per-subspace encode (only the NaN's own subspace is affected) and a
+    persisted index holding a NaN centroid."""
+    from aws_logs_parquet_converter_spark.catalog import load_table
+    from aws_logs_parquet_converter_spark.operators.similarity import (
+        DIM,
+        SUB_DIM,
+        Centroids,
+        kmeans_assign,
+        kmeans_train,
+        pq_encode,
+        pq_train_codebooks,
+    )
+
+    em = load_table(spark, "/root/testdata/sf0.001", "embeddings")
+    cents = kmeans_train(em, k=8, n_iters=2, dim=DIM)
+    cb = pq_train_codebooks(em, k=16, n_iters=2)
+    cents.df.write.parquet(str(tmp_path / "c"))
+    cb.df.write.parquet(str(tmp_path / "cb"))
+    nan_at = {5: 3, 7: DIM - 1}  # vec_id -> NaN position
+    emb = F.col("embedding").cast("array<double>")
+    for vid, pos in nan_at.items():
+        emb = F.when(
+            F.col("vec_id") == vid,
+            F.transform(
+                emb, lambda x, i: F.when(i == pos, F.lit(float("nan"))).otherwise(x)
+            ),
+        ).otherwise(emb)
+    corpus = em.select("vec_id", emb.alias("embedding"))
+
+    def assign(c):
+        return {r["vec_id"]: r["cluster"] for r in kmeans_assign(corpus, c).collect()}
+
+    def encode(c):
+        return {
+            (r["vec_id"], r["m"]): r["code"] for r in pq_encode(corpus, c).collect()
+        }
+
+    kern = assign(cents)
+    assert kern == assign(spark.read.parquet(str(tmp_path / "c")))
+    first = min(r["cluster"] for r in cents.rows)
+    assert all(kern[vid] == first for vid in nan_at)
+
+    codes = encode(cb)
+    assert codes == encode(spark.read.parquet(str(tmp_path / "cb")))
+    for vid, pos in nan_at.items():
+        m = pos // SUB_DIM
+        assert codes[(vid, m)] == min(r["cluster"] for r in cb.rows if r["m"] == m)
+
+    # a NaN CENTROID scores NaN for every vector, so it beats every
+    # finite score: every finite vector lands in it, through either path
+    # (the NaN vectors still score NaN everywhere and keep the first id)
+    second = sorted(r["cluster"] for r in cents.rows)[1]
+    nan_c = F.transform(
+        "centroid", lambda x, i: F.when(i == 0, F.lit(float("nan"))).otherwise(x)
+    )
+    spark.read.parquet(str(tmp_path / "c")).withColumn(
+        "centroid",
+        F.when(F.col("cluster") == second, nan_c).otherwise(F.col("centroid")),
+    ).write.parquet(str(tmp_path / "c_nan"))
+    persisted = spark.read.parquet(str(tmp_path / "c_nan"))
+    kern = assign(Centroids.from_frame(persisted))
+    assert kern == assign(persisted)
+    assert {v: kern[v] for v in nan_at} == {v: first for v in nan_at}
+    assert {c for v, c in kern.items() if v not in nan_at} == {second}
+
+
+def test_kmeans_train_destroys_round_broadcasts(spark, monkeypatch):
+    """Each Lloyd's round ships its centroids to the kernel in one
+    broadcast, consumed only by that round's collect: a 3-round training
+    must leave every round broadcast destroyed and only the returned
+    value's own broadcast alive."""
+    from aws_logs_parquet_converter_spark.catalog import load_table
+    from aws_logs_parquet_converter_spark.operators.similarity import (
+        DIM,
+        kmeans_assign,
+        kmeans_train,
+    )
+
+    sc = spark.sparkContext
+    made = []
+    real = sc.broadcast
+
+    def recording(value):
+        made.append(real(value))
+        return made[-1]
+
+    monkeypatch.setattr(sc, "broadcast", recording)
+    em = load_table(spark, "/root/testdata/sf0.001", "embeddings")
+    cents = kmeans_train(em, k=4, n_iters=3, dim=DIM)
+    assert kmeans_assign(em, cents).count() == em.count()
+    assert len(made) == 4 and made[-1] is cents.bc
+    assert [b._jbroadcast.isValid() for b in made] == [False, False, False, True]
+
+
+def test_empty_corpus_returns_empty_frames(spark):
+    """An empty corpus trains no centroids; the kernels then see no
+    batch, so each entry point returns an empty frame with its
+    documented schema instead of failing."""
+    from aws_logs_parquet_converter_spark.catalog import load_table
+    from aws_logs_parquet_converter_spark.operators.similarity import (
+        DIM,
+        ivf_pq_topk,
+        kmeans_assign,
+        kmeans_train,
+        semantic_dedup,
+    )
+
+    em = load_table(spark, "/root/testdata/sf0.001", "embeddings").limit(0)
+    cases = [
+        (
+            semantic_dedup(em),
+            [("vec_id", "bigint"), ("cluster", "int"), ("keep", "boolean")],
+        ),
+        (
+            kmeans_assign(em, kmeans_train(em, k=4, n_iters=2, dim=DIM)),
+            [
+                ("vec_id", "bigint"),
+                ("cluster", "int"),
+                ("emb", "array<double>"),
+                ("nrm", "double"),
+            ],
+        ),
+        (
+            ivf_pq_topk(em),
+            [("query_id", "bigint"), ("neighbor_id", "bigint"), ("rn", "int")],
+        ),
+    ]
+    for df, schema in cases:
+        assert df.dtypes == schema
+        assert df.count() == 0
+
+
+def test_assign_and_encode_plans_follow_argument_type(spark, tmp_path):
+    """A trained ``Centroids`` plans the Arrow kernel (a Python map node,
+    no nested-loop join); the same centroids read back from parquet keep
+    the in-plan fold, whose plan scans the persisted index."""
+    from aws_logs_parquet_converter_spark.catalog import load_table
+    from aws_logs_parquet_converter_spark.operators.similarity import (
+        DIM,
+        kmeans_assign,
+        kmeans_train,
+        pq_encode,
+        pq_train_codebooks,
+    )
+
+    em = load_table(spark, "/root/testdata/sf0.001", "embeddings")
+    cents = kmeans_train(em, k=4, n_iters=1, dim=DIM)
+    cb = pq_train_codebooks(em, k=16, n_iters=1)
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    for op, value, name in (
+        (kmeans_assign, cents, "centroids"),
+        (pq_encode, cb, "codebook"),
+    ):
+        path = str(tmp_path / name)
+        value.df.write.parquet(path)
+        kern = plan(op(em, value))
+        assert "MapInPandas" in kern, kern
+        assert "BroadcastNestedLoopJoin" not in kern
+        fold = op(em, spark.read.parquet(path))
+        assert "MapInPandas" not in plan(fold)
+        # the persisted index is one of the plan's file scans
+        assert any(path in f for f in fold.inputFiles()), fold.inputFiles()
 
 
 def test_stateful_width_rule(spark):

@@ -100,22 +100,17 @@ def test_no_driver_side_collect_in_operators():
             "itself stays distributed",
         ),
         "operators/similarity.py": (
-            9,
+            5,
             "every collect is a K-ROW centroid/codebook frame, never the "
-            "corpus: preload_pack (r12) collects the persisted k-row "
-            "centroid/codebook table once per STREAM RUN so foreachBatch "
-            "serving loops stop re-reading + re-packing it every "
-            "micro-batch (2 call sites: vector and subspace form); "
-            "_blas_assign materializes the k-row centroid matrix "
-            "for the Arrow-batched matmul kernel; the Lloyd's loops "
-            "(kmeans_train / pq_train_codebooks) collect the k-row (or "
-            "k x M_SUB-row) means each round and rebuild them as "
-            "LocalRelations so the next round's argmax broadcast launches "
-            "no job (r12 — one job per training round instead of "
-            "checkpoint + broadcast sub-jobs); _pack_collect does the same "
-            "for serving-path packs. k is broadcast-clamped (SEM_MAX_K / "
-            "ceil(sqrt(n)) coarse lists), never corpus-sized; the corpus "
-            "itself always stays distributed",
+            "corpus: the Lloyd's loops (kmeans_train / pq_train_codebooks) "
+            "collect the k seed rows once and the k-row (or k x M_SUB-row) "
+            "means each round, so the next round's Arrow kernel gets them "
+            "as one driver-local broadcast (one job per training round); "
+            "Centroids.from_frame collects a persisted k-row centroid table "
+            "once per STREAM RUN so foreachBatch serving loops stop "
+            "re-reading + re-packing it every micro-batch. k is "
+            "broadcast-clamped (SEM_MAX_K / ceil(sqrt(n)) coarse lists), "
+            "never corpus-sized; the corpus itself always stays distributed",
         ),
         "plans/snapshots.py": (
             9,

@@ -786,7 +786,7 @@ def test_semantic_stream_two_table_transaction_replay(spark, tmp_path):
         )
 
     cents_path = str(tmp_path / "cents")
-    kmeans_train(vecs(0, 40), k=4, n_iters=1).write.parquet(cents_path)
+    kmeans_train(vecs(0, 40), k=4, n_iters=1).df.write.parquet(cents_path)
     idx = str(tmp_path / "idx")
     snapshot_write(kmeans_assign(vecs(0, 40), spark.read.parquet(cents_path)), idx)
     pairs = str(tmp_path / "pairs")
@@ -875,7 +875,7 @@ def test_semantic_stream_first_batch_into_empty_index(spark, tmp_path):
         )
 
     cents_path = str(tmp_path / "cents")
-    kmeans_train(vecs(0, 40), k=4, n_iters=1).write.parquet(cents_path)
+    kmeans_train(vecs(0, 40), k=4, n_iters=1).df.write.parquet(cents_path)
     idx, pairs = str(tmp_path / "idx"), str(tmp_path / "pairs")
     semantic_stream_batch(vecs(0, 20), 0, cents_path, idx, pairs)
     assert current_version(spark, idx) == 1

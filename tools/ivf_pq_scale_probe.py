@@ -20,7 +20,8 @@ synthesis from tools/scale_growth_synth.py):
   persisted — the ivf_pq_topk injection seam), min-of-2. The full-ADC
   serve wall over the same frozen codes is timed for contrast.
 * **build wall** — one-time index construction (both Lloyd's trainings
-  + assign + encode), blas assign kernel; reported, not the claim.
+  + assign + encode, through the sequential-fold Arrow kernels);
+  reported, not the claim.
 
 Run: python tools/ivf_pq_scale_probe.py  (SCALE_SYNTH_DECADES=1,10 to
 split). Results recorded in SCALE.md "IVF-PQ decade probe".
@@ -75,17 +76,13 @@ def main() -> None:
             nlist = ivf_coarse_k(n)
 
             t0 = time.perf_counter()
-            cents = kmeans_train(em, k=nlist, n_iters=2, impl="blas")
-            assigned = kmeans_assign(em, cents, impl="blas").select(
-                "vec_id", "cluster"
-            )
+            cents = kmeans_train(em, k=nlist, n_iters=2)
+            assigned = kmeans_assign(em, cents).select("vec_id", "cluster")
             assigned.write.parquet(f"{work}/assign")
-            cents.write.parquet(f"{work}/cents")
+            cents.df.write.parquet(f"{work}/cents")
             cb = pq_train_codebooks(em, k=16, n_iters=3)
-            cb.write.parquet(f"{work}/cb")
-            pq_encode(em, spark.read.parquet(f"{work}/cb")).write.parquet(
-                f"{work}/codes"
-            )
+            cb.df.write.parquet(f"{work}/cb")
+            pq_encode(em, cb).write.parquet(f"{work}/codes")
             build_s = round(time.perf_counter() - t0, 3)
 
             cents_r = spark.read.parquet(f"{work}/cents")
@@ -152,17 +149,13 @@ def main() -> None:
         em = spark.read.parquet(emb_path)
         nlist = ivf_coarse_k(n)
         t0 = time.perf_counter()
-        cents = kmeans_train(em, k=nlist, n_iters=2, impl="blas")
-        assigned = kmeans_assign(em, cents, impl="blas").select(
-            "vec_id", "cluster"
-        )
+        cents = kmeans_train(em, k=nlist, n_iters=2)
+        assigned = kmeans_assign(em, cents).select("vec_id", "cluster")
         assigned.write.parquet(f"{work}/assign")
-        cents.write.parquet(f"{work}/cents")
+        cents.df.write.parquet(f"{work}/cents")
         cb = pq_train_codebooks(em, k=16, n_iters=3)
-        cb.write.parquet(f"{work}/cb")
-        pq_encode(em, spark.read.parquet(f"{work}/cb")).write.parquet(
-            f"{work}/codes"
-        )
+        cb.df.write.parquet(f"{work}/cb")
+        pq_encode(em, cb).write.parquet(f"{work}/codes")
         build_s = round(time.perf_counter() - t0, 2)
         cents_r = spark.read.parquet(f"{work}/cents")
         assigned_r = spark.read.parquet(f"{work}/assign")

@@ -14,8 +14,9 @@ synthesis: deterministic xxhash64 vectors, ~10% planted near-dups):
   (groupBy cluster -> sum), so the fixed-k=4 pathology is measurable at
   decade 100 WITHOUT materializing its ~5e9 pairs.
 * **wall** — full semantic_dedup (train + assign + within-cluster pair
-  join + keep), min-of-2, auto-k only (fixed-k full runs stop at the
-  decade where the candidate count predicts a multi-hour join).
+  join + keep, assign through the sequential-fold Arrow kernel),
+  min-of-2, auto-k (fixed-k full runs stop at the decade where the
+  candidate count predicts a multi-hour join).
 
 Expected and measured (SCALE.md "Semantic dedup decade probe"):
 auto-k candidates grow ~linearly (expected membership pinned at ~64);
@@ -72,34 +73,21 @@ def main() -> None:
             emb = spark.read.parquet(path)
             row: dict = {"decade": d, "n_vecs": n, "k_auto": semantic_k(n)}
 
-            def candidates(k: int, impl: str) -> int:
-                cents = kmeans_train(emb, k=k, n_iters=2, impl=impl)
-                sizes = (
-                    kmeans_assign(emb, cents, impl=impl)
-                    .groupBy("cluster")
-                    .count()
-                )
+            def candidates(k: int) -> int:
+                cents = kmeans_train(emb, k=k, n_iters=2)
+                sizes = kmeans_assign(emb, cents).groupBy("cluster").count()
                 return int(
                     sizes.agg(
                         F.sum(F.col("count") * (F.col("count") - 1) / 2)
                     ).collect()[0][0]
                 )
 
-            # the BLAS kernel is the auto-k scale path (native HOF assign
-            # measured 32-core-saturated past a 50-min timeout at decade
-            # 100); at the smaller decades BOTH impls run and must agree
-            # on the exact candidate count (empirical bit-agreement at
-            # scale, extending the fixture-level test)
-            row["cand_auto"] = candidates(row["k_auto"], "blas")
-            row["cand_fixed_k4"] = candidates(4, "native")
-            row["wall_auto_blas"] = time_min_of(
-                2, lambda: semantic_dedup(emb, impl="blas").count()
+            row["cand_auto"] = candidates(row["k_auto"])
+            row["cand_fixed_k4"] = candidates(4)
+            row["wall_auto"] = time_min_of(
+                2, lambda: semantic_dedup(emb).count()
             )
             if n <= FIXED_FULL_RUN_MAX_N:
-                assert candidates(row["k_auto"], "native") == row["cand_auto"]
-                row["wall_auto_native"] = time_min_of(
-                    2, lambda: semantic_dedup(emb).count()
-                )
                 row["wall_fixed_k4"] = time_min_of(
                     2, lambda: semantic_dedup(emb, k=4).count()
                 )
