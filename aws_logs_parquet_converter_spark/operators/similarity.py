@@ -12,6 +12,7 @@ to sub-ULP float divergence, raw scores are not part of the contract.
 
 from __future__ import annotations
 
+import logging
 from dataclasses import dataclass
 from functools import cached_property
 
@@ -23,6 +24,7 @@ from . import register
 from ..functions.text import hash60, sql_hash60
 from .dedup import spread_input
 
+log = logging.getLogger(__name__)
 
 #: Per-task input target for the similarity working sets (bytes of source
 #: data per task). The k-means/PQ/LSH passes do O(k * dim) interpreted
@@ -31,15 +33,11 @@ from .dedup import spread_input
 #: corpus across EVERY core instead costs more in per-task scheduling than
 #: the parallelism returns (measured: the r12 training legs spent more
 #: wall in 32-task stage overhead than in compute — ~1000 tasks per
-#: sim_ann_ivf_pq run over a 2000-row corpus). Env-tunable; the target is
-#: derived from INPUT SIZE (optimizer stats, no job), so at production
-#: scale the partition count still reaches every core (capped at
+#: sim_ann_ivf_pq run over a 2000-row corpus). The target is derived
+#: from INPUT SIZE (optimizer stats, no job), so at production scale the
+#: partition count still reaches every core (capped at
 #: defaultParallelism) and this is exactly the old behavior.
-import os as _os
-
-SIM_SPREAD_BYTES_PER_TASK = int(
-    _os.environ.get("SPARK_GRAFT_SIM_SPREAD_BYTES", str(512 * 1024))
-)
+SIM_SPREAD_BYTES_PER_TASK = 512 * 1024
 
 
 #: Per-task input target for the sign-LSH BATCH paths (rplsh_append_batch /
@@ -51,10 +49,8 @@ SIM_SPREAD_BYTES_PER_TASK = int(
 #: daily batch would round-robin into mostly-empty partitions. 16 KiB/task
 #: (~30 vectors) reproduces full width at every measured fixture point
 #: (640 KB batch -> 40 -> capped at cores) while a genuinely tiny batch
-#: stops fanning out to the whole cluster. Env-tunable.
-RPLSH_BATCH_BYTES_PER_TASK = int(
-    _os.environ.get("SPARK_GRAFT_RPLSH_BATCH_BYTES", str(16 * 1024))
-)
+#: stops fanning out to the whole cluster.
+RPLSH_BATCH_BYTES_PER_TASK = 16 * 1024
 
 
 def _spread(docs: DataFrame, bytes_per_task: int | None = None) -> DataFrame:
@@ -779,10 +775,10 @@ def _centroid_pack(cents: DataFrame) -> DataFrame:
 
 
 def _pack_local(spark: SparkSession, rows) -> DataFrame:
-    """Driver-side packed-centroid frame from COLLECTED rows that already
-    carry ``half_cnorm`` (computed by the canonical Spark expression in
-    the collect query — no driver float arithmetic): the one-slice local
-    equivalent of :func:`_centroid_pack`, broadcast by
+    """Driver-side packed-centroid frame from centroid rows that already
+    carry ``half_cnorm`` (bit-identical to the canonical ``0.5 * dot``
+    Spark expression): the one-slice local equivalent of
+    :func:`_centroid_pack`, broadcast by
     :func:`_ivf_probes` for a :class:`Centroids`."""
     from pyspark.sql import types as T
 
@@ -804,12 +800,13 @@ def _pack_local(spark: SparkSession, rows) -> DataFrame:
 
 @dataclass(frozen=True, eq=False)
 class Centroids:
-    """Trained centroids held driver-side: the k collected rows
-    ``(cluster, centroid, n_members, half_cnorm)`` or, with ``m``, the
-    k x M_SUB PQ codebook rows ``(m, cluster, c_sub, half_cnorm)``.
-    Half-norms come from the canonical ``0.5 * dot`` Spark expression in
-    the collect query (never driver float arithmetic) and collected
-    doubles round-trip exactly.
+    """Trained centroids held driver-side: the k rows ``(cluster,
+    centroid, n_members, half_cnorm)`` or, with ``m``, the k x M_SUB PQ
+    codebook rows ``(m, cluster, c_sub, half_cnorm)``. Half-norms equal
+    the canonical ``0.5 * dot`` Spark expression bit for bit — the
+    trainers fold them sequentially (:func:`_half_norms`),
+    :meth:`from_frame` collects them from that expression — and doubles
+    round-trip Spark exactly.
 
     :func:`kmeans_train` and :func:`pq_train_codebooks` return one, and
     assign/encode pick their implementation by argument type: a
@@ -900,8 +897,8 @@ def _local_df(spark: SparkSession, data, schema) -> DataFrame:
 # - argmax keeps the first maximum over cluster-ascending ids — exactly
 #   ``max_by(cluster, (score, -cluster))``'s smaller-id tiebreak.
 #
-# Half-norms are NEVER recomputed here: they ride in from the collected
-# rows, where the canonical ``0.5 * dot`` Spark expression produced them.
+# Half-norms are never recomputed in a kernel: they ride in with the
+# centroid rows, folded the same way by the trainers (:func:`_half_norms`).
 
 
 def _rows_np(rows, key: str):
@@ -998,18 +995,15 @@ def _seq_pq_kernel(
     embeddings: DataFrame,
     cb: Centroids,
     coarse: Centroids | None = None,
-    emit: str = "codes",
 ) -> DataFrame:
     """Arrow-batched per-subspace encode against a codebook
     :class:`Centroids`; slices each vector into its M_SUB contiguous
     subspaces in the kernel (no posexplode, no per-m pack join) and
     computes the per-subspace argmax with the same sequential fold.
 
-    emit="codes": (vec_id, m, code) — the pq_encode shape.
-    emit="train": (m, cluster, sub_vec) — the training-round recompute
-    input (sub_vec echoes through Arrow exactly).
-    With ``coarse`` the COARSE argmax is fused into the same pass (the
-    inverted-list build): (vec_id, cluster, m, code)."""
+    Emits (vec_id, m, code) — the pq_encode shape. With ``coarse`` the
+    COARSE argmax is fused into the same pass (the inverted-list build):
+    (vec_id, cluster, m, code)."""
     bc_m = cb.bc
     bc_c = None if coarse is None else coarse.bc
     emb = F.col("embedding").cast("array<double>").alias("emb") \
@@ -1035,29 +1029,15 @@ def _seq_pq_kernel(
             )
             for m, (ids, C, half) in per_m.items():
                 Em = E[:, m * SUB_DIM : (m + 1) * SUB_DIM]
-                best = _seq_scores_best(Em, ids, C, half).astype("int32")
-                if emit == "train":
-                    parts.append(
-                        pd.DataFrame(
-                            {
-                                "m": np.full(n, m, dtype="int32"),
-                                "cluster": best,
-                                "sub_vec": list(np.ascontiguousarray(Em)),
-                            }
-                        )
-                    )
-                else:
-                    out = {"vec_id": pdf["vec_id"]}
-                    if cl is not None:
-                        out["cluster"] = cl
-                    out["m"] = np.full(n, m, dtype="int32")
-                    out["code"] = best
-                    parts.append(pd.DataFrame(out))
+                out = {"vec_id": pdf["vec_id"]}
+                if cl is not None:
+                    out["cluster"] = cl
+                out["m"] = np.full(n, m, dtype="int32")
+                out["code"] = _seq_scores_best(Em, ids, C, half).astype("int32")
+                parts.append(pd.DataFrame(out))
             yield pd.concat(parts)
 
-    if emit == "train":
-        schema = "m int, cluster int, sub_vec array<double>"
-    elif coarse is not None:
+    if coarse is not None:
         schema = "vec_id bigint, cluster int, m int, code int"
     else:
         schema = "vec_id bigint, m int, code int"
@@ -1146,16 +1126,15 @@ def _argmax_cluster(emb_col: Column, cs_col: Column) -> Column:
 def _mean_by_cluster(
     assigned: DataFrame, keys: list[str], emb_col: str, dim: int
 ) -> DataFrame:
-    """Exact per-cluster mean vectors in ONE hash aggregate (r12): with a
-    fixed embedding width the per-dimension sums become ``dim`` ordinary
-    ``sum`` columns keyed on the cluster id — partial (map-side)
-    aggregation collapses each task to k rows before the single
-    exchange, replacing the posexplode-to-(cluster, pos) cells plus
-    second (cluster) aggregation (two exchanges, n*dim generated rows).
-    Arithmetic is unchanged: exact 1e-7-scaled integer sums per
-    dimension (order-independent), divided by the member count — every
-    value equals the cell path's and the oracle's. The ~2*dim Column
-    builds are memoized per session (pure function of (emb_col, dim))."""
+    """Exact per-key mean vectors in ONE hash aggregate (used by
+    :func:`label_centroids`): with a fixed embedding width the
+    per-dimension sums become ``dim`` ordinary ``sum`` columns keyed on
+    the group — partial (map-side) aggregation collapses each task to k
+    rows before the single exchange. Arithmetic: exact 1e-7-scaled
+    integer sums per dimension (order-independent), divided by the
+    member count — the oracle's, and the trainers' (:func:`_lloyd`). The
+    ~2*dim Column builds are memoized per session (pure function of
+    (emb_col, dim))."""
     sums, centroid = _session_memo(
         ("meanexprs", emb_col, dim),
         lambda: (
@@ -1176,104 +1155,167 @@ def _mean_by_cluster(
     return out.select(*keys, centroid, "n_members")
 
 
+#: Ceiling on auto-sized k. The assign kernels ship all k centroids to
+#: every task in one broadcast and score O(n * k) dot products, so k must
+#: stay broadcast-sized: 2^16 centroids x 64 dims x 8 B ~ 34 MB. Past it
+#: the coarse quantizer itself should move to a hierarchical/IVF build
+#: (out of scope, noted).
+SEM_MAX_K = 65536
+
+#: Rows the k-means and PQ trainers learn from: the first
+#: ``min(n, TRAIN_SAMPLE_ROWS)`` vectors ranked by ``(hash60(vec_id,
+#: "km"), vec_id)``, fetched to the driver once (:func:`train_sample`).
+#: Equal to SEM_MAX_K, so every seed a clamped k asks for is in the
+#: sample; 65,536 x 64 doubles is 32 MiB, and the integer image as much
+#: again. FAISS ("Billion-scale similarity search with GPUs") likewise
+#: trains on a bounded sample.
+TRAIN_SAMPLE_ROWS = SEM_MAX_K
+#: FAISS's minimum training points per centroid; below it a training
+#: logs one warning.
+MIN_POINTS_PER_CENTROID = 39
+
+
+@dataclass(frozen=True, eq=False)
+class TrainSample:
+    """The trainers' one collected sample, in ``(hash60(vec_id, "km"),
+    vec_id)`` order: ``emb`` holds the vectors as doubles, ``image``
+    Spark's own ``round(v * 1e7)`` bigint of every component (the exact
+    integers the centroid sums add up; a NaN component images to NULL,
+    which a SQL sum skips, so it is stored as 0), and ``pq_key`` the
+    ``hash60(vec_id, "pq")`` rank key of the codebook seeds."""
+
+    spark: SparkSession
+    vec_id: object  # numpy int64 (S,)
+    emb: object  # numpy float64 (S, dim)
+    image: object  # numpy int64 (S, dim)
+    pq_key: object  # numpy int64 (S,)
+
+
+def train_sample(embeddings: DataFrame) -> TrainSample:
+    """Fetch the training sample in ONE query: top-``TRAIN_SAMPLE_ROWS``
+    by ``(hash60(vec_id, "km"), vec_id)``, returned as one Arrow table.
+    The integer image is computed by Spark with the expression the
+    oracles' centroid sums use, so no driver-side rounding enters."""
+    import numpy as np
+
+    emb = F.col("embedding").cast("array<double>")
+    vid = F.col("vec_id").cast("string")
+    tbl = (
+        embeddings.select(
+            "vec_id",
+            emb.alias("emb"),
+            F.transform(
+                emb, lambda v: F.when(~F.isnan(v), F.round(v * 1e7).cast("bigint"))
+            ).alias("image"),
+            hash60(vid, seed="pq").alias("pq_key"),
+            hash60(vid, seed="km").alias("km_key"),
+        )
+        .orderBy("km_key", "vec_id")
+        .limit(TRAIN_SAMPLE_ROWS)
+        .toArrow()
+    )
+    n = tbl.num_rows
+
+    def matrix(name, dtype):
+        flat = tbl.column(name).combine_chunks().flatten().fill_null(0).to_numpy()
+        return flat.astype(dtype).reshape(n, len(flat) // n if n else DIM)
+
+    return TrainSample(
+        embeddings.sparkSession,
+        tbl.column("vec_id").to_numpy().astype(np.int64),
+        matrix("emb", np.float64),
+        matrix("image", np.int64),
+        tbl.column("pq_key").to_numpy().astype(np.int64),
+    )
+
+
+def _half_norms(C):
+    """``0.5 * dot(c, c)`` per row with the kernels' sequential fold —
+    bit-identical to the canonical Spark expression (see the kernel block
+    comment)."""
+    import numpy as np
+
+    return 0.5 * (np.add.accumulate(C * C, axis=1)[:, -1] + 0.0)
+
+
+def _lloyd(E, image, seeds, n_iters: int):
+    """Driver-side Lloyd's rounds over sample rows ``E`` (doubles) and
+    ``image`` (their bigint ``round(v * 1e7)``), seeded with the row
+    indices ``seeds`` as clusters ``0..len(seeds)-1``. Assign is
+    :func:`_seq_scores_best`; recompute is the exact int64 sum of the
+    image per cluster, then ``(sum / 1e7) / n`` in doubles — the
+    arithmetic of the oracles' ``tc{i}``. A cluster left with no members
+    drops out and the survivors keep their ids. Returns ``(ids, C,
+    counts)``; ``counts`` is None when no round ran."""
+    import numpy as np
+
+    ids = np.arange(len(seeds), dtype=np.int64)
+    C = E[seeds]
+    counts = None
+    for _ in range(n_iters):
+        if len(ids) == 0:
+            break
+        label = _seq_scores_best(E, ids, C, _half_norms(C))
+        order = np.argsort(label, kind="stable")
+        ids, starts, counts = np.unique(
+            label[order], return_index=True, return_counts=True
+        )
+        sums = np.add.reduceat(image[order], starts, axis=0)
+        C = (sums.astype(np.float64) / 1e7) / counts.astype(np.float64)[:, None]
+    return ids, C, counts
+
+
+def _warn_small_sample(trainer: str, s: TrainSample, k: int) -> None:
+    if len(s.vec_id) < MIN_POINTS_PER_CENTROID * k:
+        log.warning(
+            "%s: %d training vectors for k=%d, fewer than %d per centroid",
+            trainer, len(s.vec_id), k, MIN_POINTS_PER_CENTROID,
+        )
+
+
 def kmeans_train(
-    embeddings: DataFrame,
-    k: int = 4,
-    n_iters: int = 3,
-    dim: int | None = None,
+    embeddings: DataFrame | TrainSample, k: int = 4, n_iters: int = 3
 ) -> Centroids:
     """Deterministic Lloyd's k-means over an embedding column; returns the
     trained :class:`Centroids` (its ``df`` is ``(cluster, n_members,
     centroid)``).
 
-    Per iteration (composing the registered assign/centroid steps into the
-    full training loop):
+    Training reads one bounded sample (:func:`train_sample`, or a
+    :class:`TrainSample` a caller already fetched for a second training):
+    one Spark query, then every round runs on the driver in numpy. Seeds
+    are the first ``k`` sample rows — the hash60(vec_id, "km") ranking —
+    and each round assigns with the kernels' sequential fold and
+    recomputes from exact integer sums (:func:`_lloyd`). Centroids and
+    half-norms therefore equal what the unrolled DuckDB oracle
+    (:func:`_kmeans_cte_parts`) computes over the same sample, bit for
+    bit. The full corpus is assigned only afterwards, by the distributed
+    Arrow kernel (:func:`kmeans_assign`). An empty corpus trains no rows
+    and returns an empty value."""
+    import numpy as np
+    from pyspark.sql import Row
 
-    * **assign**: each corpus row computes ``max_by(cluster, (score,
-      -cluster))`` against the round's k centroids (half-norms
-      precomputed) in the bit-exact Arrow kernel
-      (:func:`_seq_assign_kernel`) — the assign stage is SHUFFLE-FREE: no
-      (row x centroid) materialization, no ``groupBy(vec_id)`` exchange.
-    * **recompute**: exact 1e-7-scaled integer sums per dimension
-      (order-independent => identical at any partition count). With a
-      known fixed width (``dim=...``, every similarity call site) this is
-      ONE hash aggregate keyed on cluster (:func:`_mean_by_cluster`);
-      ``dim=None`` keeps the dynamic posexplode cell path.
-    * **lineage / iteration cost**: each round COLLECTS the k centroid
-      rows to the driver (bounded: k is clamped by SEM_MAX_K /
-      ceil(sqrt(n))) and ships them to the next round's kernel as one
-      driver-local broadcast, so one Lloyd's round is exactly ONE Spark
-      job (scan + local argmax + one aggregate exchange + k-row
-      collect). That collect is the round broadcast's only consumer, so
-      the broadcast is destroyed right after it. Half-norms are computed
-      INSIDE the collect query with the canonical ``0.5 * dot``
-      expression, so no driver-side float arithmetic ever enters the
-      comparison path.
-
-    Determinism end-to-end: md5-ranked init, integer-scaled sums, explicit
-    argmax tiebreak toward the smaller cluster id, same fold order and an
-    exact double round-trip through collect, so the unrolled DuckDB
-    oracles reproduce every round. An empty corpus trains no rows and
-    returns an empty value.
-    """
-    spark = embeddings.sparkSession
-    e = _spread(embeddings).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
-    h = hash60(F.col("vec_id").cast("string"), seed="km")
-    w0 = Window.orderBy("h", "vec_id")
-    half = (F.lit(0.5) * dot(F.col("centroid"), F.col("centroid"))).alias(
-        "half_cnorm"
-    )
-    rows = (
-        e.select("vec_id", "emb", h.alias("h"))
-        .orderBy("h", "vec_id")
-        .limit(k)
-        .select(
-            (F.row_number().over(w0) - 1).alias("cluster"),
-            F.col("emb").alias("centroid"),
+    s = embeddings if isinstance(embeddings, TrainSample) else train_sample(embeddings)
+    _warn_small_sample("kmeans_train", s, k)
+    ids, C, counts = _lloyd(s.emb, s.image, np.arange(min(k, len(s.vec_id))), n_iters)
+    members = [None] * len(ids) if counts is None else counts.tolist()
+    rows = tuple(
+        Row(cluster=c, centroid=v, n_members=n, half_cnorm=h)
+        for c, v, n, h in zip(
+            ids.tolist(), C.tolist(), members, _half_norms(C).tolist()
         )
-        .select("cluster", "centroid", half)
-        .collect()  # k seed rows; halves computed by the canonical expr
     )
-    for _ in range(n_iters):
-        cur = Centroids(tuple(rows), spark)
-        assigned = _seq_assign_kernel(e, cur)
-        if dim is not None:
-            # fixed-width corpus: ONE aggregation for the recompute
-            recompute = _mean_by_cluster(assigned, ["cluster"], "emb", dim)
-        else:
-            # dynamic-width fallback: the original cell path
-            ex = assigned.select(
-                "cluster", F.posexplode("emb").alias("pos", "v")
-            )
-            cell = ex.groupBy("cluster", "pos").agg(
-                F.sum(F.round(F.col("v") * 1e7).cast("bigint")).alias("sc"),
-                F.count("*").alias("n"),
-            )
-            recompute = (
-                cell.select(
-                    "cluster",
-                    "pos",
-                    ((F.col("sc").cast("double") / F.lit(1e7)) / F.col("n")).alias(
-                        "c"
-                    ),
-                    F.col("n").alias("n_members"),
-                )
-                .groupBy("cluster")
-                .agg(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("pos", "c"))),
-                        lambda x: x["c"],
-                    ).alias("centroid"),
-                    F.first("n_members").alias("n_members"),
-                )
-            )
-        # ONE job per round: this collect is the round's only action and
-        # the only consumer of the round's broadcast
-        rows = recompute.select("cluster", "centroid", "n_members", half).collect()
-        cur.bc.destroy()
-    return Centroids(tuple(rows), spark)
+    return Centroids(rows, s.spark)
+
+
+def _sample_cte(name: str, src: str, cols: str) -> str:
+    """``name``: the first ``TRAIN_SAMPLE_ROWS`` rows of ``src`` by
+    ``(hash60(vec_id, "km"), vec_id)`` with their rank ``rn`` — the
+    SQL form of :func:`train_sample`'s query."""
+    h = sql_hash60("CAST(vec_id AS VARCHAR)", seed="km")
+    return f"""{name} AS (
+      SELECT * FROM (
+        SELECT {cols}, row_number() OVER (ORDER BY {h}, vec_id) AS rn
+        FROM {src}) WHERE rn <= {TRAIN_SAMPLE_ROWS})"""
 
 
 def _kmeans_cte_parts(
@@ -1287,18 +1329,16 @@ def _kmeans_cte_parts(
     ``_semantic_k_sql`` — it only ever appears as the seed cutoff
     ``rn <= k``). Same technique as ``_pq_trained_cb_cte``: md5-ranked
     init, exact integer-scaled centroid sums, smaller-cluster argmax
-    tiebreak make every round bit-reproducible in both engines."""
-    h = sql_hash60("CAST(vec_id AS VARCHAR)", seed="km")
+    tiebreak make every round bit-reproducible in both engines. The
+    rounds read ``sample`` — the engine's training sample, the first
+    ``TRAIN_SAMPLE_ROWS`` of the same ranking — while ``e`` stays the
+    whole corpus for the consumers' assignment CTEs."""
     parts = [
         f"""e AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM {src}),
-    seeds AS (
-      SELECT vec_id, rn - 1 AS cluster FROM (
-        SELECT vec_id, row_number() OVER (ORDER BY {h}, vec_id) AS rn
-        FROM {src}) WHERE rn <= {k}),
+    {_sample_cte("sample", "e", "vec_id, emb")},
     tc0 AS (
-      SELECT sd.cluster, e.emb AS centroid
-      FROM e JOIN seeds sd ON sd.vec_id = e.vec_id)"""
+      SELECT rn - 1 AS cluster, emb AS centroid FROM sample WHERE rn <= {k})"""
     ]
     prev = "tc0"
     for i in range(1, n_iters + 1):
@@ -1307,7 +1347,7 @@ def _kmeans_cte_parts(
       SELECT e.vec_id, c.cluster,
              list_dot_product(e.emb, c.centroid)
                - 0.5 * list_dot_product(c.centroid, c.centroid) AS score
-      FROM e CROSS JOIN {prev} c),
+      FROM sample e CROSS JOIN {prev} c),
     asg{i} AS (
       SELECT vec_id, cluster FROM (
         SELECT vec_id, cluster,
@@ -1317,7 +1357,7 @@ def _kmeans_cte_parts(
     cell{i} AS (
       SELECT a.cluster, generate_subscripts(e.emb, 1) AS pos,
              unnest(e.emb) AS v
-      FROM asg{i} a JOIN e ON e.vec_id = a.vec_id),
+      FROM asg{i} a JOIN sample e ON e.vec_id = a.vec_id),
     agg{i} AS (
       SELECT cluster, pos,
              SUM(CAST(round(v * 10000000) AS BIGINT)) AS sc, COUNT(*) AS n
@@ -1353,21 +1393,20 @@ def _kmeans_oracle(k: int = 4, n_iters: int = 3) -> str:
     oracle=_kmeans_oracle(),
     doc=(
         "Full Lloyd's k-means training loop (k=4, 3 iterations) over the "
-        "embeddings table — the IVF coarse-quantizer BUILD, composing the "
-        "oracle-checked assign (sim_ivf_assign) and centroid "
-        "(sim_label_centroids) steps with localCheckpoint lineage "
-        "truncation. As of r5 the whole ITERATIVE loop is value-hash-"
-        "checked: the deterministic rounds unroll into a DuckDB CTE "
-        "chain (_kmeans_oracle), graduating this query out of the "
-        "rows-only class. Per iteration: one broadcast, one hash aggregate over "
-        "the corpus, one |k x dims|-cell aggregate; corpus vectors shuffle "
-        "as (vec_id, emb) once per iteration in the partial-agg merge, "
-        "nothing is ever collected to the driver."
+        "embeddings table — the IVF coarse-quantizer BUILD. One Spark "
+        "query fetches a bounded training sample (the first "
+        "TRAIN_SAMPLE_ROWS = 65,536 vectors by hash60(vec_id), with "
+        "Spark's round(v * 1e7) integer image of each), and every "
+        "round then runs on the driver: the sequential-fold assign of "
+        "the Arrow kernels and exact integer-sum centroid recomputes. "
+        "The whole ITERATIVE loop is value-hash-checked: the "
+        "deterministic rounds unroll into a DuckDB CTE chain "
+        "(_kmeans_oracle) over the same sample."
     ),
 )
 def sim_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kmeans_train(
-        load_table(spark, sf_dir, "embeddings"), k=4, n_iters=3, dim=DIM
+        load_table(spark, sf_dir, "embeddings"), k=4, n_iters=3
     ).df
 
 
@@ -1383,12 +1422,6 @@ def sim_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: found only when probed). 64 keeps each cluster's all-pairs block
 #: (~2k candidate pairs) far below one AQE-splittable task.
 SEM_TARGET_CLUSTER_SIZE = 64
-#: Ceiling on auto-sized k: training broadcasts the k-row centroid table
-#: every iteration, so k must stay broadcast-sized. 2^16 centroids x
-#: 64 dims x 8 B ~ 34 MB — at the default 10 MB broadcast threshold Spark
-#: would shuffle instead, so this clamp marks where the coarse quantizer
-#: itself should move to a hierarchical/IVF build (out of scope, noted).
-SEM_MAX_K = 65536
 
 
 def semantic_k(n_rows: int) -> int:
@@ -1396,7 +1429,7 @@ def semantic_k(n_rows: int) -> int:
     rule shape: ceil(n / SEM_TARGET_CLUSTER_SIZE), floored at 4 (the
     fixture width) and clamped to [1, min(n, SEM_MAX_K)] so tiny corpora
     never ask for more seeds than vectors and huge ones never outgrow the
-    per-iteration centroid broadcast."""
+    assign kernel's centroid broadcast."""
     import math
 
     return max(1, min(max(4, math.ceil(n_rows / SEM_TARGET_CLUSTER_SIZE)),
@@ -1467,19 +1500,19 @@ def semantic_dedup(
     pairs LINEAR in n (measured 1x/10x/100x, tools/scale_growth_semantic
     .py; a fixed k=4 measured quadratic for contrast — SCALE.md). The
     paper runs k in the tens of thousands for billions of docs, the same
-    n/target rule. Training cost is the same broadcast-assign loop as
-    sim_kmeans_train, and the pair join is a plain equi-join on cluster
-    (no cartesian, no all-corpus shuffle of anything wider than
-    (vec_id, cluster, emb))."""
-    # r12: pin the spread corpus for this call's duration (iterative-ML
-    # working set; recomputed every invocation) — training rounds, the
+    n/target rule. Training is sim_kmeans_train's (one bounded sample
+    fetch, then driver-side rounds), and the pair join is a plain
+    equi-join on cluster (no cartesian, no all-corpus shuffle of
+    anything wider than (vec_id, cluster, emb))."""
+    # r12: pin the spread corpus for this call's duration (working set;
+    # recomputed every invocation) — the training sample fetch, the
     # assign pass and both pair-join sides otherwise each replay the
     # scan + spread repartition. The sizing count() doubles as the
     # materialization action.
     embeddings = _pin(embeddings)
     if k is None:
         k = semantic_k(embeddings.count())
-    cents = kmeans_train(embeddings, k=k, n_iters=n_iters, dim=DIM)
+    cents = kmeans_train(embeddings, k=k, n_iters=n_iters)
     assigned = (
         kmeans_assign(embeddings, cents)
         # assignment appears THREE times downstream (both pair-join sides
@@ -1596,7 +1629,7 @@ def build_semantic_index(old_corpus: DataFrame, path: str, n_iters: int = 2) -> 
     so the day-2 pair confirm needs no corpus join-back). Training reads
     the old corpus exactly once, here."""
     k = semantic_k(old_corpus.count())
-    cents = kmeans_train(old_corpus, k=k, n_iters=n_iters, dim=DIM)
+    cents = kmeans_train(old_corpus, k=k, n_iters=n_iters)
     cents.df.write.mode("overwrite").parquet(f"{path}/centroids")
     kmeans_assign(old_corpus, cents).write.mode("overwrite").parquet(
         f"{path}/assign"
@@ -1757,7 +1790,7 @@ def _semantic_stream_state_for(spark: SparkSession, sf_dir: str) -> tuple:
         )
     ).select("vec_id", "embedding")
     cents_path = tempfile.mkdtemp(prefix="semstream_cents_")
-    cents = kmeans_train(old, k=semantic_k(old.count()), n_iters=2, dim=DIM)
+    cents = kmeans_train(old, k=semantic_k(old.count()), n_iters=2)
     cents.df.write.mode("overwrite").parquet(cents_path)
     index_root = tempfile.mkdtemp(prefix="semstream_idx_")
     snapshot_write(kmeans_assign(old, cents), index_root)
@@ -2004,62 +2037,38 @@ def _subvectors(embeddings: DataFrame, id_alias: str) -> DataFrame:
 
 
 def pq_train_codebooks(
-    embeddings: DataFrame, k: int = 16, n_iters: int = 3
-) -> DataFrame:
-    """REAL per-subspace PQ codebooks via Lloyd's k-means, trained jointly
-    for all M_SUB subspaces in one pass per iteration (the subspace id
-    ``m`` is just an extra grouping key, so 8 independent k-means runs
-    cost the same shuffles as one).
+    embeddings: DataFrame | TrainSample, k: int = 16, n_iters: int = 3
+) -> Centroids:
+    """REAL per-subspace PQ codebooks via Lloyd's k-means (Jégou et al.,
+    "Product Quantization for Nearest Neighbor Search", TPAMI'11): M_SUB
+    independent k-means runs, one per contiguous SUB_DIM-wide slice.
 
-    Same determinism skeleton as :func:`kmeans_train` — md5-ranked init
-    (the first ``k`` vectors by hash60 seed every subspace), exact
-    1e-7-scaled integer centroid sums, argmax tiebreak toward the smaller
-    cluster id, one k x M_SUB-row collect per round (one job and one
-    exchange per round; the round's broadcast is destroyed after it) —
-    which makes the whole training loop bit-reproducible and therefore
-    UNROLLABLE into a DuckDB oracle (``_pq_trained_cb_cte``): the
-    registered query stays value-hash-checked even though training is
-    iterative. Returns a codebook :class:`Centroids` (``m=True``) whose
-    ``df`` matches :func:`pq_codebook`: (m, cluster, c_sub, half_n),
-    |k x M_SUB| rows, broadcast everywhere.
+    Same skeleton as :func:`kmeans_train`, on the same kind of sample
+    (:func:`train_sample`, or a shared :class:`TrainSample`): one Spark
+    query, then driver-side rounds (:func:`_lloyd`). The seeds are the
+    first ``k`` sample rows by hash60(vec_id, "pq"), sliced per subspace.
+    The rounds are therefore UNROLLABLE into a DuckDB oracle
+    (``_pq_trained_cb_cte``) over the same sample, so the registered
+    query stays value-hash-checked even though training is iterative.
+    Returns a codebook :class:`Centroids` (``m=True``) whose ``df``
+    matches :func:`pq_codebook`: (m, cluster, c_sub, half_n), |k x M_SUB|
+    rows, broadcast everywhere.
     """
-    corpus = _spread(embeddings)
-    sub = _subvectors(corpus, "vec_id")
-    h = hash60(F.col("vec_id").cast("string"), seed="pq")
-    w0 = Window.orderBy("h", "vec_id")
-    seeds = (
-        embeddings.select("vec_id", h.alias("h"))
-        .orderBy("h", "vec_id")
-        .limit(k)
-        .select("vec_id", (F.row_number().over(w0) - 1).alias("cluster"))
-    )
-    spark = embeddings.sparkSession
-    half = (F.lit(0.5) * dot(F.col("c_sub"), F.col("c_sub"))).alias("half_cnorm")
-    rows = (
-        sub.join(F.broadcast(seeds), "vec_id")
-        .select("m", "cluster", F.col("sub_vec").alias("c_sub"))
-        .select("m", "cluster", "c_sub", half)
-        .collect()  # k x M_SUB seed rows; halves by the canonical expr
-    )
-    for _ in range(n_iters):
-        # per-subspace argmax via the Arrow sequential-fold kernel —
-        # slicing, per-m codeword argmax and the sub_vec echo all happen
-        # in one vectorized pass (bit-identical scores/tiebreak; see
-        # _seq_pq_kernel)
-        cur = Centroids(tuple(rows), spark, m=True)
-        asg = _seq_pq_kernel(corpus, cur, emit="train")
-        # ONE hash aggregate for all 8 subspace recomputes ((m, cluster)
-        # keyed, SUB_DIM static sums) — replaces the posexplode cell pass
-        # plus second aggregation; identical exact-integer arithmetic.
-        # The k x M_SUB-row collect is the round's only action.
-        rows = (
-            _mean_by_cluster(asg, ["m", "cluster"], "sub_vec", SUB_DIM)
-            .select("m", "cluster", F.col("centroid").alias("c_sub"))
-            .select("m", "cluster", "c_sub", half)
-            .collect()
-        )
-        cur.bc.destroy()  # the round's collect was its only consumer
-    return Centroids(tuple(rows), spark, m=True)
+    import numpy as np
+    from pyspark.sql import Row
+
+    s = embeddings if isinstance(embeddings, TrainSample) else train_sample(embeddings)
+    _warn_small_sample("pq_train_codebooks", s, k)
+    seeds = np.lexsort((s.vec_id, s.pq_key))[:k]
+    rows = []
+    for m in range(M_SUB):
+        sub = slice(m * SUB_DIM, (m + 1) * SUB_DIM)
+        ids, C, _ = _lloyd(s.emb[:, sub], s.image[:, sub], seeds, n_iters)
+        rows += [
+            Row(m=m, cluster=c, c_sub=v, half_cnorm=h)
+            for c, v, h in zip(ids.tolist(), C.tolist(), _half_norms(C).tolist())
+        ]
+    return Centroids(tuple(rows), s.spark, m=True)
 
 
 def pq_encode(embeddings: DataFrame, codebook: Centroids | DataFrame) -> DataFrame:
@@ -2280,18 +2289,25 @@ def _pq_trained_cb_cte(
     SOURCE CTEs, so the incremental variant can train on the frozen old
     slice only; ``prefix`` renames every internal CTE so the chain can
     coexist with another Lloyd's unroll (the IVF-PQ oracle runs the
-    full-vector coarse loop AND this residual loop in one statement)."""
+    full-vector coarse loop AND this residual loop in one statement).
+    Like the engine, the rounds train on ``{prefix}ssub`` — the slices of
+    the first ``TRAIN_SAMPLE_ROWS`` vectors by the k-means ranking —
+    seeded by the "pq" ranking within that sample."""
     h = sql_hash60("CAST(vec_id AS VARCHAR)", seed="pq")
     p = prefix
     parts = [
-        f"""{p}seeds AS (
+        f"""{_sample_cte(f"{p}sample", emb, "vec_id")},
+    {p}ssub AS (
+      SELECT * FROM {esub} WHERE vec_id IN (SELECT vec_id FROM {p}sample)),
+    {p}seeds AS (
       SELECT vec_id, rn - 1 AS cluster FROM (
         SELECT vec_id, row_number() OVER (ORDER BY {h}, vec_id) AS rn
-        FROM {emb}) WHERE rn <= {k}),
+        FROM {p}sample) WHERE rn <= {k}),
     {p}tc0 AS (
       SELECT s.m, sd.cluster, s.sub_vec AS c_sub
-      FROM {esub} s JOIN {p}seeds sd ON sd.vec_id = s.vec_id)"""
+      FROM {p}ssub s JOIN {p}seeds sd ON sd.vec_id = s.vec_id)"""
     ]
+    esub = f"{p}ssub"
     prev = f"{p}tc0"
     for i in range(1, n_iters + 1):
         parts.append(
@@ -2419,22 +2435,6 @@ def sim_ann_pq_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- IVF-PQ: coarse-cell pruning over the PQ-coded corpus -------------------
 
 
-def _train_pair(fa, fb):
-    """Run two INDEPENDENT training thunks on two driver threads and
-    return ``(fa(), fb())``. Spark's scheduler accepts concurrent job
-    submission from multiple driver threads; each thunk's own job
-    sequence (and so its trained values) is exactly what it computes
-    when run alone — only the per-job fixed costs overlap. Exceptions
-    propagate to the caller."""
-    import concurrent.futures
-
-    with concurrent.futures.ThreadPoolExecutor(max_workers=1) as ex:
-        fut_b = ex.submit(fb)
-        a = fa()
-        b = fut_b.result()
-    return a, b
-
-
 def ivf_coarse_k(n_rows: int) -> int:
     """Coarse-list count for IVF-PQ — the classic sqrt rule (Jégou et
     al., TPAMI'11 §V: nlist ~ sqrt(N) balances the two scan terms:
@@ -2537,9 +2537,11 @@ def ivf_pq_topk(
     x M) — sublinear per query, the property that makes billion-vector
     serving possible.
 
-    Plan shape: coarse centroids train once (Lloyd's, localCheckpoint
-    lineage), assignment is the broadcast + max_by hash aggregate, the
-    probe set and the per-query LUTs are tiny and broadcast, and the
+    Plan shape: both quantizers train from ONE bounded sample fetch
+    (:func:`train_sample`; the Lloyd's rounds run on the driver), the
+    corpus is assigned and encoded in one distributed Arrow pass (coarse
+    argmax and all M_SUB codes per vector), the probe set and the
+    per-query LUTs are tiny and broadcast, and the
     candidate restriction is a broadcast semi-shaped equi-join on the
     coarse cluster id — at 100 TB the codes table is hash-partitioned by
     cluster so a probe touches only its cells' partitions. Codes encode
@@ -2558,41 +2560,24 @@ def ivf_pq_topk(
     if coarse is None and assigned is None and codes is None:
         # r12: pin the projected corpus in the block manager for the
         # DURATION OF THIS CALL (the standard iterative-ML working-set
-        # cache — Spark MLlib's own KMeans does the same): every Lloyd's
-        # round, both trainings, the encode and the re-rank otherwise
-        # re-run the parquet scan + spread repartition, one extra AQE
-        # stage-job each. eager=False lets the sizing count() double as
-        # the materialization action. Recomputed per invocation — never
-        # a cross-run memo.
+        # cache — Spark MLlib's own KMeans does the same): the training
+        # sample fetch, the sizing count(), the encode and the re-rank
+        # otherwise re-run the parquet scan + spread repartition, one
+        # extra AQE stage-job each. eager=False lets the first of them
+        # double as the materialization action. Recomputed per
+        # invocation — never a cross-run memo.
         embeddings = _pin(embeddings)
-    if coarse is None and codebook is None:
-        # r12 (guide §2.6 stragglers/critical path): the coarse k-means
-        # and the PQ codebook trainings are INDEPENDENT (both read only
-        # the pinned corpus; neither consumes the other's output), but
-        # their Lloyd's rounds are collect-per-round driver loops whose
-        # wall is per-job fixed cost, so run sequentially they simply
-        # add. Submitting them from two driver threads lets the
-        # scheduler interleave the tiny jobs (Spark supports concurrent
-        # job submission; each training's own round sequence — and
-        # therefore its trained values — is unchanged and was verified
-        # bit-identical). Measured: 4.6 s -> 2.7-3.3 s for the pair.
-        k_coarse = ivf_coarse_k(embeddings.count())  # also materializes the pin
-        cents, cb = _train_pair(
-            lambda: kmeans_train(
-                embeddings, k=k_coarse, n_iters=coarse_iters, dim=DIM
-            ),
-            lambda: pq_train_codebooks(embeddings, k=16, n_iters=3),
+    # both trainings learn from ONE sample fetch
+    trains = coarse is None or codebook is None
+    sample = train_sample(embeddings) if trains else None
+    cents = (
+        kmeans_train(
+            sample, k=ivf_coarse_k(embeddings.count()), n_iters=coarse_iters
         )
-    else:
-        cents = (
-            kmeans_train(
-                embeddings, k=ivf_coarse_k(embeddings.count()),
-                n_iters=coarse_iters, dim=DIM,
-            )
-            if coarse is None
-            else coarse
-        )
-        cb = pq_train_codebooks(embeddings, k=16, n_iters=3) if codebook is None else codebook
+        if coarse is None
+        else coarse
+    )
+    cb = pq_train_codebooks(sample, k=16, n_iters=3) if codebook is None else codebook
 
     probes = _ivf_probes(embeddings, cents, n_queries, nprobe)
     qsub = _subvectors(embeddings.where(F.col("vec_id") < n_queries), "query_id")
@@ -2731,8 +2716,8 @@ def pq_append_batch(spark: SparkSession, path: str, batch: DataFrame) -> None:
     """Append a NEW vector batch to a persisted PQ index WITHOUT touching
     the trained state — the daily maintenance op of a RAG/retrieval
     ingest pipeline. The frozen codebooks load from ``<path>/codebook``
-    (|16 x 8| rows, broadcast), the batch encodes in one pass (broadcast
-    join + max_by hash aggregate — pq_encode), and the 8-small-ints rows
+    (|16 x 8| rows, broadcast), the batch encodes in one pass (the
+    in-plan per-row argmax of pq_encode), and the 8-small-ints rows
     APPEND to ``<path>/codes``. No re-training, no re-encode of old
     vectors, no read of the old codes: per-day cost is O(|batch|).
     Standard PQ practice — codebooks are corpus-distribution statistics
@@ -3220,7 +3205,7 @@ def sim_outlier_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r12: per-call working-set pin (see semantic_dedup) — training, the
     # assign pass and the scoring join share one materialized corpus.
     e = _pin(load_table(spark, sf_dir, "embeddings"))
-    cents = kmeans_train(e, k=semantic_k(e.count()), n_iters=2, dim=DIM)
+    cents = kmeans_train(e, k=semantic_k(e.count()), n_iters=2)
     assigned = kmeans_assign(e, cents)  # (vec_id, cluster, emb, nrm)
     scored = assigned.join(
         F.broadcast(cents.df.select("cluster", "centroid")), "cluster"
@@ -3247,29 +3232,20 @@ def build_ivf_pq_index(embeddings: DataFrame, path: str) -> None:
     """Materialize the FULL IVF-PQ index as parquet — ``<path>/coarse``
     (nlist = ceil(sqrt(n)) centroids), ``<path>/assign`` (vec_id ->
     coarse cell), ``<path>/codebook`` and ``<path>/codes`` (the PQ
-    half). Both trainings and both encodes read the raw vectors exactly
-    once, HERE; the serving query never does."""
-    k_coarse = ivf_coarse_k(embeddings.count())
-
-    # the coarse chain (train -> write, assign -> write) and the PQ chain
-    # (train -> write, encode -> write) are independent — neither reads
-    # the other's output — so they run on two driver threads
-    # (_train_pair). Each chain assigns/encodes with the value it just
-    # trained; doubles round-trip parquet exactly, so the written
-    # assignment and codes equal what the persisted index would give.
-    def _coarse_chain():
-        cents = kmeans_train(embeddings, k=k_coarse, n_iters=2, dim=DIM)
-        cents.df.write.mode("overwrite").parquet(f"{path}/coarse")
-        kmeans_assign(embeddings, cents).select("vec_id", "cluster").write.mode(
-            "overwrite"
-        ).parquet(f"{path}/assign")
-
-    def _pq_chain():
-        cb = pq_train_codebooks(embeddings, k=16, n_iters=3)
-        cb.df.write.mode("overwrite").parquet(f"{path}/codebook")
-        pq_encode(embeddings, cb).write.mode("overwrite").parquet(f"{path}/codes")
-
-    _train_pair(_coarse_chain, _pq_chain)
+    half). Both trainings share one sample fetch and both encodes read
+    the raw vectors once, HERE; the serving query never does. Each
+    assign/encode uses the value just trained; doubles round-trip
+    parquet exactly, so the written assignment and codes equal what the
+    persisted index gives."""
+    sample = train_sample(embeddings)
+    cents = kmeans_train(sample, k=ivf_coarse_k(embeddings.count()), n_iters=2)
+    cents.df.write.mode("overwrite").parquet(f"{path}/coarse")
+    kmeans_assign(embeddings, cents).select("vec_id", "cluster").write.mode(
+        "overwrite"
+    ).parquet(f"{path}/assign")
+    cb = pq_train_codebooks(sample, k=16, n_iters=3)
+    cb.df.write.mode("overwrite").parquet(f"{path}/codebook")
+    pq_encode(embeddings, cb).write.mode("overwrite").parquet(f"{path}/codes")
 
 
 #: per-sf_dir cache of built IVF-PQ index paths (setup state)

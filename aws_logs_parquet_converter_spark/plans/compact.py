@@ -7,19 +7,12 @@ snappy parquet, overwrite, date in the *path* (``partitionBy([])``).
 
 Spark-first upgrades, chosen deliberately (SURVEY.md §4):
 
-* Partition mode is a policy choice, and the default is the reference's
-  round-robin ``repartition(n)`` — NOT ``repartitionByRange``. Range
-  partitioning plans a *sampling job* that executes the whole upstream plan
-  a second time (RangePartitioner sketches its input); on a text-parse
-  ingest that means reading and regex-parsing the raw corpus twice — a 1.6×
-  measured slowdown at bench scale and a second full scan of the raw bucket
-  at 100 TB. Round-robin is one pass, and ``sortWithinPartitions`` still
-  time-clusters every file internally, so Parquet ROW-GROUP min/max pruning
-  is intact; only file-level disjointness is lost, which the daily
-  ``partitionBy`` directories already provide at day granularity.
-* ``mode="range"`` stays available for write-once-read-many layouts where
-  file-disjoint time ranges are worth the extra upstream pass (e.g.
-  re-compacting already-parquet data, where the second pass is cheap).
+* Files are cut by the reference's round-robin ``repartition(n)``, one
+  pass over the input, and ``sortWithinPartitions`` on the format's
+  event-time column time-clusters every file internally, so Parquet
+  ROW-GROUP min/max pruning is intact. Only file-level disjointness is
+  lost, which the daily ``partitionBy`` directories already provide at
+  day granularity.
 * Real Hive partition columns (``partitionBy("year","month","day")``) with
   dynamic partition overwrite: reruns replace exactly one day (idempotent,
   like the reference's per-date overwrite) without clobbering siblings.
@@ -35,7 +28,7 @@ exchange is AQE-coalesced, and speculation stays off for S3 sinks.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -55,7 +48,6 @@ class CompactionPolicy:
     #: volume (aim 128-512 MB of input per file); output files are
     #: ~0.19x that after zstd.
     target_file_mb: int | None = None
-    sort_keys: tuple[str, ...] = ("request_time",)
     # zstd, not the reference's snappy: measured on the synthetic corpus at
     # 200k lines, zstd lands 0.184x raw vs snappy's 0.307x at IDENTICAL
     # write wall-time (the pass is parse-bound, not codec-bound), and every
@@ -67,15 +59,10 @@ class CompactionPolicy:
     compression: str = "zstd"
     hive_partitioning: bool = False  # reference default (--hive-formatted-folders)
     max_records_per_file: int | None = None
-    # "roundrobin": one pass over the input (reference semantics); "range":
-    # file-disjoint sort-key ranges at the cost of a sampling pass that
-    # re-executes the upstream plan (see module docstring).
-    partition_mode: str = "roundrobin"
     # parquet (default; columnar + stats pruning) | orc (columnar alt) |
     # json / csv (interchange exports — no row-group stats, use only when a
     # downstream consumer can't read columnar)
     output_format: str = "parquet"
-    extra_writer_options: dict[str, str] = field(default_factory=dict)
 
 
 def estimate_input_bytes(df: DataFrame) -> int | None:
@@ -149,17 +136,12 @@ def resolve_file_count(df: DataFrame, policy: CompactionPolicy) -> int:
     return max(1, -(-est // (policy.target_file_mb * 1024 * 1024)))
 
 
-def cluster_for_write(df: DataFrame, policy: CompactionPolicy) -> DataFrame:
-    """Repartition to the target file count and sort within partitions."""
-    keys = [F.col(k) for k in policy.sort_keys]
-    n = resolve_file_count(df, policy)
-    if policy.partition_mode == "range":
-        out = df.repartitionByRange(n, *keys)
-    elif policy.partition_mode == "roundrobin":
-        out = df.repartition(n)
-    else:
-        raise ValueError(f"unknown partition_mode {policy.partition_mode!r}")
-    return out.sortWithinPartitions(*policy.sort_keys)
+def cluster_for_write(
+    df: DataFrame, policy: CompactionPolicy, ts_col: str = "request_time"
+) -> DataFrame:
+    """Round-robin to the target file count and sort each file by the
+    event-time column ``ts_col``."""
+    return df.repartition(resolve_file_count(df, policy)).sortWithinPartitions(ts_col)
 
 
 def with_date_partitions(df: DataFrame, ts_col: str = "request_time") -> DataFrame:
@@ -211,7 +193,7 @@ def write_compacted(
         out = with_date_partitions(out, ts_col)
         partition_cols = ["year", "month", "day"]
 
-    out = cluster_for_write(out, policy)
+    out = cluster_for_write(out, policy, ts_col)
 
     writer = (
         out.write.mode("overwrite")
@@ -222,8 +204,6 @@ def write_compacted(
     )
     if policy.max_records_per_file:
         writer = writer.option("maxRecordsPerFile", str(policy.max_records_per_file))
-    for k, v in policy.extra_writer_options.items():
-        writer = writer.option(k, v)
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
     writer.format(policy.output_format).save(destination)

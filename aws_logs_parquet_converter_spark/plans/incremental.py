@@ -20,16 +20,8 @@ from datetime import date, datetime, timedelta
 
 from pyspark.sql import SparkSession
 
-from ..sources.registry import read_logs
+from ..sources.registry import FORMATS, read_logs
 from .compact import CompactionPolicy, write_compacted
-
-# event-time column per log format (drives clustering + date partitioning)
-TS_COL = {
-    "s3": "request_time",
-    "alb": "time",
-    "vpcflow": "start_ts",
-    "cloudfront": "request_ts",
-}
 
 log = logging.getLogger(__name__)
 
@@ -44,7 +36,7 @@ class RollupConfig:
     start_date: str | None = None  # ISO date -> backfill mode
     policy: CompactionPolicy = CompactionPolicy()
     date_path_format: str = "%Y/%m/%d"  # raw-log input layout
-    log_format: str = "s3"  # s3 | alb | vpcflow | cloudfront (sources/registry.py)
+    log_format: str = "s3"  # s3 | alb | vpcflow | cloudfront | cloudtrail (sources/registry.py)
     #: Multi-folder mode (reference ``s3_server_access_logs.py:334-351``):
     #: one logged-bucket folder per immediate child of ``source_root``, each
     #: compacted to its own ``{destination_root}/{folder}`` subtree in the
@@ -119,12 +111,6 @@ def compact_day(
     from pyspark.errors.exceptions.captured import AnalysisException
 
     t0 = time.time()
-    ts_col = TS_COL[cfg.log_format]
-    policy = cfg.policy
-    if policy.sort_keys == ("request_time",) and ts_col != "request_time":
-        from dataclasses import replace
-
-        policy = replace(policy, sort_keys=(ts_col,))
     try:
         parsed = read_logs(
             spark, input_path_for(cfg, day, folder), fmt=cfg.log_format
@@ -132,8 +118,8 @@ def compact_day(
         dq = write_compacted(
             parsed,
             destination_for(cfg, day, folder),
-            policy,
-            ts_col=ts_col,
+            cfg.policy,
+            ts_col=FORMATS[cfg.log_format].ts_col,
             observe=True,
         )
     except AnalysisException as e:

@@ -1,6 +1,6 @@
 """Z-order (Morton) clustering keys for multi-dimensional file skipping.
 
-A single-column sort (``CompactionPolicy.sort_keys``) gives perfect
+A single-column sort (``cluster_for_write``'s event-time sort) gives perfect
 row-group min/max pruning on ONE dimension; queries filtering an independent
 second column (e.g. ``s3_bucket`` when files are time-sorted) read every
 file. Interleaving the bits of two quantized dimensions into one sort key

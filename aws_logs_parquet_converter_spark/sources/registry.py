@@ -38,17 +38,24 @@ class LogFormat:
     name: str
     schema: StructType
     parse: Callable[[DataFrame], DataFrame]
+    #: the parsed event-time TIMESTAMP column: it clusters compacted
+    #: files and derives their date partitions, batch and streaming
+    ts_col: str
 
 
 FORMATS: dict[str, LogFormat] = {
-    "s3": LogFormat("s3", S3_ACCESS_LOG_SCHEMA, parse_s3_access_log_lines),
-    "alb": LogFormat("alb", ALB_LOG_SCHEMA, parse_alb_log_lines),
-    "vpcflow": LogFormat("vpcflow", VPC_FLOW_SCHEMA, parse_vpc_flow_lines),
+    "s3": LogFormat(
+        "s3", S3_ACCESS_LOG_SCHEMA, parse_s3_access_log_lines, "request_time"
+    ),
+    "alb": LogFormat("alb", ALB_LOG_SCHEMA, parse_alb_log_lines, "time"),
+    "vpcflow": LogFormat(
+        "vpcflow", VPC_FLOW_SCHEMA, parse_vpc_flow_lines, "start_ts"
+    ),
     "cloudfront": LogFormat(
-        "cloudfront", CLOUDFRONT_LOG_SCHEMA, parse_cloudfront_log_lines
+        "cloudfront", CLOUDFRONT_LOG_SCHEMA, parse_cloudfront_log_lines, "request_ts"
     ),
     "cloudtrail": LogFormat(
-        "cloudtrail", CLOUDTRAIL_LOG_SCHEMA, parse_cloudtrail_lines
+        "cloudtrail", CLOUDTRAIL_LOG_SCHEMA, parse_cloudtrail_lines, "event_time"
     ),
 }
 

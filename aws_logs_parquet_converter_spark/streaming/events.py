@@ -1149,19 +1149,6 @@ def drain_upsert_merge(spark: SparkSession, sf_dir: str, dest: str) -> DataFrame
 # ---------------------------------------------------------------------------
 
 
-# Event-time column per log format, used to derive the day partition of
-# the streaming compaction sink. cast("timestamp") is a no-op for already
-# typed columns and converts epoch-seconds BIGINTs (vpcflow).
-_STREAM_TIME_COLS = {
-    "s3": "request_time",
-    "alb": "time",
-    "vpcflow": "start_ts",
-    "cloudfront": "request_ts",
-    "cloudtrail": "event_time",
-}
-
-
-
 def _write_line_files(lines, n_files: int, prefix: str) -> str:
     """Gate fixture: split ``lines`` across ``n_files`` text files in a
     fresh temp dir (one arriving file per micro-batch) — shared by every
@@ -1215,9 +1202,7 @@ def log_stream_merge_batch(
     from ..sources.registry import FORMATS
 
     parsed = FORMATS[fmt].parse(bdf)
-    day = F.date_format(
-        F.col(_STREAM_TIME_COLS[fmt]).cast("timestamp"), "yyyyMMdd"
-    )
+    day = F.date_format(FORMATS[fmt].ts_col, "yyyyMMdd")
     (
         parsed.withColumn("day", F.coalesce(day, F.lit("dead")))
         .write.mode("overwrite")
@@ -1268,9 +1253,7 @@ def log_stream_snapshot_batch(
     from ..sources.registry import FORMATS
 
     parsed = FORMATS[fmt].parse(bdf)
-    day = F.date_format(
-        F.col(_STREAM_TIME_COLS[fmt]).cast("timestamp"), "yyyyMMdd"
-    )
+    day = F.date_format(FORMATS[fmt].ts_col, "yyyyMMdd")
     out = parsed.withColumn("day", F.coalesce(day, F.lit("dead"))).withColumn(
         "batch", F.lit(int(batch_id))
     )

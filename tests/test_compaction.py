@@ -153,6 +153,43 @@ def test_incremental_driver_alb_format(spark, tmp_path):
     assert "elb_status_code" in back.columns
 
 
+def test_incremental_driver_cloudtrail_format(spark, tmp_path):
+    """--log-format cloudtrail compacts end to end: the format registry
+    names its event-time column, which sorts every output file."""
+    import pyarrow.parquet as pq
+
+    from aws_logs_parquet_converter_spark.functions.cloudtrail_parse import (
+        parse_cloudtrail_lines,
+    )
+    from aws_logs_parquet_converter_spark.plans.incremental import run
+    from aws_logs_parquet_converter_spark.sources.generator import (
+        generate_cloudtrail_lines,
+    )
+
+    day = date(2024, 7, 2)
+    src = tmp_path / "raw" / "2024" / "07" / "02"
+    os.makedirs(src)
+    lines = generate_cloudtrail_lines(120, seed=7, garbage_every=29)
+    (src / "ct.log").write_text("\n".join(lines) + "\n")
+
+    cfg = RollupConfig(
+        source_root=str(tmp_path / "raw"),
+        destination_root=str(tmp_path / "out"),
+        lookback_days=1,
+        log_format="cloudtrail",
+        policy=CompactionPolicy(num_output_files=2),
+    )
+    assert run(spark, cfg, today=date(2024, 7, 3)) == [day]
+    out = str(tmp_path / "out" / "2024" / "07" / "02")
+    expected = parse_cloudtrail_lines(spark.createDataFrame([(x,) for x in lines], "value string"))
+    assert spark.read.parquet(out).count() == expected.count()
+    files = glob.glob(out + "/*.parquet")
+    assert len(files) == 2
+    for f in files:
+        ts = [t for t in pq.read_table(f, columns=["event_time"])["event_time"].to_pylist() if t]
+        assert ts and ts == sorted(ts)
+
+
 def test_default_compaction_is_single_pass_roundrobin(spark, tmp_path):
     from aws_logs_parquet_converter_spark.plans.compact import (
         CompactionPolicy,
@@ -167,8 +204,6 @@ def test_default_compaction_is_single_pass_roundrobin(spark, tmp_path):
     # round-robin exchange, no range sampling job re-executing the parse
     assert "ROUND_ROBIN" in plan or "RoundRobinPartitioning" in plan
     assert "rangepartitioning" not in plan.lower()
-    ranged = cluster_for_write(df, CompactionPolicy(partition_mode="range"))
-    assert "rangepartitioning" in ranged._jdf.queryExecution().executedPlan().toString().lower()
 
 
 def test_observed_dq_metrics_ride_the_write(spark, tmp_path):

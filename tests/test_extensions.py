@@ -720,13 +720,12 @@ def test_seq_kernel_matches_expression_assign(spark, tmp_path):
     full (vec_id, cluster, nrm) output on the fixture corpus."""
     from aws_logs_parquet_converter_spark.catalog import load_table
     from aws_logs_parquet_converter_spark.operators.similarity import (
-        DIM,
         kmeans_assign,
         kmeans_train,
     )
 
     em = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    cents = kmeans_train(em, k=8, n_iters=2, dim=DIM)
+    cents = kmeans_train(em, k=8, n_iters=2)
     path = str(tmp_path / "centroids")
     cents.df.write.parquet(path)
 
@@ -780,7 +779,7 @@ def test_kernel_and_fold_agree_on_nan_vectors(spark, tmp_path):
     )
 
     em = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    cents = kmeans_train(em, k=8, n_iters=2, dim=DIM)
+    cents = kmeans_train(em, k=8, n_iters=2)
     cb = pq_train_codebooks(em, k=16, n_iters=2)
     cents.df.write.parquet(str(tmp_path / "c"))
     cb.df.write.parquet(str(tmp_path / "cb"))
@@ -794,6 +793,18 @@ def test_kernel_and_fold_agree_on_nan_vectors(spark, tmp_path):
             ),
         ).otherwise(emb)
     corpus = em.select("vec_id", emb.alias("embedding"))
+    # training on the NaN corpus: a NaN component adds nothing to its
+    # cluster's integer sum while its vector still counts as a member, so
+    # every trained value stays finite (the distributed SQL-sum loop did
+    # the same: NULL components were skipped)
+    import math
+
+    trained = kmeans_train(corpus, k=8, n_iters=2).rows
+    assert sum(r["n_members"] for r in trained) == em.count()
+    codebook = pq_train_codebooks(corpus, k=16, n_iters=2).rows
+    values = [x for r in trained for x in r["centroid"] + [r["half_cnorm"]]]
+    values += [x for r in codebook for x in r["c_sub"] + [r["half_cnorm"]]]
+    assert all(math.isfinite(x) for x in values)
 
     def assign(c):
         return {r["vec_id"]: r["cluster"] for r in kmeans_assign(corpus, c).collect()}
@@ -832,32 +843,105 @@ def test_kernel_and_fold_agree_on_nan_vectors(spark, tmp_path):
     assert {c for v, c in kern.items() if v not in nan_at} == {second}
 
 
-def test_kmeans_train_destroys_round_broadcasts(spark, monkeypatch):
-    """Each Lloyd's round ships its centroids to the kernel in one
-    broadcast, consumed only by that round's collect: a 3-round training
-    must leave every round broadcast destroyed and only the returned
-    value's own broadcast alive."""
-    from aws_logs_parquet_converter_spark.catalog import load_table
-    from aws_logs_parquet_converter_spark.operators.similarity import (
-        DIM,
-        kmeans_assign,
-        kmeans_train,
-    )
+def _jobs(spark, fn) -> int:
+    """Number of Spark jobs ``fn()`` launches, counted by job group."""
+    import uuid
 
     sc = spark.sparkContext
-    made = []
-    real = sc.broadcast
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
-    def recording(value):
-        made.append(real(value))
-        return made[-1]
 
-    monkeypatch.setattr(sc, "broadcast", recording)
+def test_each_training_launches_one_spark_job(spark):
+    """A training is one Spark job, the sample fetch: every Lloyd's round
+    runs on the driver. ``ivf_pq_topk``'s two trainings share one fetch,
+    so building it costs the pinned corpus's count plus ONE training."""
+    from aws_logs_parquet_converter_spark.catalog import load_table
+    from aws_logs_parquet_converter_spark.operators.similarity import (
+        _pin,
+        ivf_pq_topk,
+        kmeans_train,
+        pq_train_codebooks,
+        train_sample,
+    )
+
     em = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    cents = kmeans_train(em, k=4, n_iters=3, dim=DIM)
-    assert kmeans_assign(em, cents).count() == em.count()
-    assert len(made) == 4 and made[-1] is cents.bc
-    assert [b._jbroadcast.isValid() for b in made] == [False, False, False, True]
+    assert _jobs(spark, lambda: kmeans_train(em, k=4, n_iters=3)) == 1
+    assert _jobs(spark, lambda: pq_train_codebooks(em, k=16, n_iters=3)) == 1
+
+    def both():
+        sample = train_sample(em)
+        kmeans_train(sample, k=23, n_iters=2)
+        pq_train_codebooks(sample, k=16, n_iters=3)
+
+    assert _jobs(spark, both) == 1
+    pin_and_count = _jobs(spark, lambda: _pin(em).count())
+    assert _jobs(spark, lambda: ivf_pq_topk(em)) == pin_and_count + 1
+
+
+def test_training_sample_spec_is_shared_with_the_oracles(
+    spark, tmp_path, monkeypatch
+):
+    """Engine and DuckDB oracles train on the same sample: with
+    ``TRAIN_SAMPLE_ROWS`` at 200 of the fixture's 500 vectors,
+    ``kmeans_train`` equals ``_kmeans_oracle`` and ``pq_train_codebooks``
+    equals ``_pq_trained_cb_cte``, each rendered under that cap. The
+    second corpus copies the first-ranked vector over the second, so
+    k-means seeds 0 and 1 tie everywhere: cluster 1 empties in the first
+    round and drops out without renumbering the others."""
+    import duckdb
+
+    from aws_logs_parquet_converter_spark.functions.text import sql_hash60
+    from aws_logs_parquet_converter_spark.operators import similarity as sim
+
+    monkeypatch.setattr(sim, "TRAIN_SAMPLE_ROWS", 200)
+    src = "/root/testdata/sf0.001/embeddings.parquet"
+    con = duckdb.connect()
+    h = sql_hash60("CAST(vec_id AS VARCHAR)", seed="km")
+    first, second = (
+        r[0]
+        for r in con.execute(
+            f"SELECT vec_id FROM read_parquet('{src}') ORDER BY {h}, vec_id LIMIT 2"
+        ).fetchall()
+    )
+    dup = str(tmp_path / "dup.parquet")
+    con.execute(
+        f"""COPY (
+          SELECT vec_id,
+                 CASE WHEN vec_id = {second}
+                      THEN (SELECT embedding FROM read_parquet('{src}')
+                            WHERE vec_id = {first})
+                      ELSE embedding END AS embedding
+          FROM read_parquet('{src}')) TO '{dup}' (FORMAT parquet)"""
+    )
+    pq_sql = f"""WITH {sim._ESUB_CTE}, {sim._pq_trained_cb_cte(16, 3)}
+        SELECT m, cluster, c_sub, half_n FROM trained"""
+    for path in (src, dup):
+        con.execute(
+            f"CREATE OR REPLACE VIEW embeddings AS SELECT * FROM read_parquet('{path}')"
+        )
+        em = spark.read.parquet(path)
+        km = sorted(
+            (r.cluster, r.n_members, list(r.centroid))
+            for r in sim.kmeans_train(em, k=4, n_iters=3).df.collect()
+        )
+        assert km == sorted(
+            (c, n, list(v)) for c, n, v in con.execute(sim._kmeans_oracle(4, 3)).fetchall()
+        )
+        assert sum(n for _, n, _ in km) == 200  # members counted over the sample
+        pq = sorted(
+            (r.m, r.cluster, list(r.c_sub), r.half_n)
+            for r in sim.pq_train_codebooks(em, k=16, n_iters=3).df.collect()
+        )
+        assert pq == sorted(
+            (m, c, list(v), hn) for m, c, v, hn in con.execute(pq_sql).fetchall()
+        )
+    assert [c for c, _, _ in km] == [0, 2, 3]
 
 
 def test_empty_corpus_returns_empty_frames(spark):
@@ -866,7 +950,6 @@ def test_empty_corpus_returns_empty_frames(spark):
     documented schema instead of failing."""
     from aws_logs_parquet_converter_spark.catalog import load_table
     from aws_logs_parquet_converter_spark.operators.similarity import (
-        DIM,
         ivf_pq_topk,
         kmeans_assign,
         kmeans_train,
@@ -880,7 +963,7 @@ def test_empty_corpus_returns_empty_frames(spark):
             [("vec_id", "bigint"), ("cluster", "int"), ("keep", "boolean")],
         ),
         (
-            kmeans_assign(em, kmeans_train(em, k=4, n_iters=2, dim=DIM)),
+            kmeans_assign(em, kmeans_train(em, k=4, n_iters=2)),
             [
                 ("vec_id", "bigint"),
                 ("cluster", "int"),
@@ -904,7 +987,6 @@ def test_assign_and_encode_plans_follow_argument_type(spark, tmp_path):
     the in-plan fold, whose plan scans the persisted index."""
     from aws_logs_parquet_converter_spark.catalog import load_table
     from aws_logs_parquet_converter_spark.operators.similarity import (
-        DIM,
         kmeans_assign,
         kmeans_train,
         pq_encode,
@@ -912,7 +994,7 @@ def test_assign_and_encode_plans_follow_argument_type(spark, tmp_path):
     )
 
     em = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    cents = kmeans_train(em, k=4, n_iters=1, dim=DIM)
+    cents = kmeans_train(em, k=4, n_iters=1)
     cb = pq_train_codebooks(em, k=16, n_iters=1)
 
     def plan(df):

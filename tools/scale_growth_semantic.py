@@ -42,7 +42,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from aws_logs_parquet_converter_spark.session import build_session
-from scale_growth_synth import N_VECS_BASE, synth_embeddings, time_min_of
+from scale_growth_synth import N_VECS_BASE, driver_memory, synth_embeddings, time_min_of
 
 DECADES = [
     int(x) for x in os.environ.get("SCALE_SYNTH_DECADES", "1,10,100").split(",")
@@ -54,7 +54,7 @@ FIXED_FULL_RUN_MAX_N = 20_000
 def main() -> None:
     spark = build_session(
         app_name="scale_growth_semantic",
-        extra_conf={"spark.ui.enabled": "false", "spark.driver.memory": "24g"},
+        extra_conf={"spark.ui.enabled": "false", "spark.driver.memory": driver_memory()},
     )
     from aws_logs_parquet_converter_spark.operators.similarity import (
         kmeans_assign,

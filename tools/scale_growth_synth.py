@@ -49,6 +49,15 @@ TOKENS_PER_DOC = 50
 DIM = 64
 
 
+def driver_memory() -> str:
+    """Driver heap sized from the box, as perfbench sizes it: a quarter of
+    MemTotal, between 1 and 2 GiB (the driver JVM also hosts the local
+    executors)."""
+    with open("/proc/meminfo", encoding="ascii") as fh:
+        total_kb = next(int(line.split()[1]) for line in fh if line.startswith("MemTotal:"))
+    return f"{max(1024, min(2048, total_kb // 4096))}m"
+
+
 def synth_documents(
     spark: SparkSession, n: int, variant_pos: int = 0
 ) -> DataFrame:
